@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .index_store import commit_manifest, read_manifest
+from . import index_store as store
 from .relational import portable_hash32
 from .text import fingerprint
 
@@ -331,14 +331,9 @@ def _containment_pairs_from_shingled(
 # overlap; prefer the hash tiers when symmetric similarity suffices.
 # ---------------------------------------------------------------------------
 
-_CONT_IDX_PREFIXES = ("cgs-", "tombstones-")
-
-
-def _containment_idx_artifacts(manifest: dict) -> set:
-    arts = set(manifest.get("cg_dirs", []))
-    if manifest.get("tombstones_file"):
-        arts.add(manifest["tombstones_file"])
-    return arts
+_CONTAINMENT = store.StoreKind("containment", 2, (store.Group(
+    "cg_dirs", "cgs-", "id {id_type}, sh_size int, gram long, is_prefix boolean"
+),))
 
 
 def _containment_gram_rows(shingled: DataFrame, threshold: float) -> DataFrame:
@@ -378,20 +373,6 @@ def _containment_gram_rows(shingled: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def _write_containment_version(rows: DataFrame, path: str) -> str:
-    import os
-    import uuid
-
-    from big_data_analysis_spark.io import write_parquet
-
-    d = f"cgs-{uuid.uuid4().hex[:12]}"
-    write_parquet(
-        rows.select("id", "sh_size", "gram", "is_prefix"),
-        os.path.join(path, d),
-    )
-    return d
-
-
 def containment_index_save(
     df: DataFrame,
     text_col: str,
@@ -407,10 +388,6 @@ def containment_index_save(
     prefix length depends on both), recorded in the manifest —
     increments validate them, so a store can never silently mix gram
     sizes."""
-    import os
-
-    from .index_store import commit_manifest
-
     # ONE snapshot feeds the precheck and the write (the ADVICE r8
     # discipline: a nondeterministic source must not hand the precheck
     # and the persisted artifact different rows)
@@ -423,25 +400,11 @@ def containment_index_save(
             "containment_index_save: empty input — bootstrap an empty "
             "store with containment_index_init and grow it by increments"
         )
-    os.makedirs(path, exist_ok=True)  # a refused save leaves nothing
     shingled = _containment_shingled(docs, "__t", "id", n)
-    d = _write_containment_version(
-        _containment_gram_rows(shingled, threshold), path
-    )
-    commit_manifest(
-        path,
-        {
-            "format_version": 2,
-            "kind": "containment",
-            "id_col": id_col,
-            "id_type": dict(df.dtypes)[id_col],
-            "n": n,
-            "threshold": threshold,
-            "cg_dirs": [d],
-        },
-        prefixes=_CONT_IDX_PREFIXES,
-        artifacts_fn=_containment_idx_artifacts,
-    )
+    store.save(_CONTAINMENT, path, _containment_gram_rows(shingled, threshold), {
+        "id_col": id_col, "id_type": dict(df.dtypes)[id_col],
+        "n": n, "threshold": threshold,
+    })
 
 
 def containment_index_init(
@@ -455,61 +418,16 @@ def containment_index_init(
     """Commit an EMPTY containment index (``cg_dirs: []``) — the
     bootstrap for corpora that start at zero and grow by increments
     (manifest-only empty state; an empty parquet dir is unreadable)."""
-    import os
-
-    from .index_store import commit_manifest
-
-    os.makedirs(path, exist_ok=True)
-    commit_manifest(
-        path,
-        {
-            "format_version": 2,
-            "kind": "containment",
-            "id_col": id_col,
-            "id_type": id_type,
-            "n": n,
-            "threshold": threshold,
-            "cg_dirs": [],
-        },
-        prefixes=_CONT_IDX_PREFIXES,
-        artifacts_fn=_containment_idx_artifacts,
-    )
+    store.init(_CONTAINMENT, path, {
+        "id_col": id_col, "id_type": id_type, "n": n, "threshold": threshold,
+    })
 
 
 def containment_index_load(spark, path: str):
     """Lazy ``(rows, manifest)`` where rows is (id, sh_size,
     gram=xxhash64(shingle), is_prefix); tombstoned ids masked per dir
-    branch. format_version 1 stores (raw shingle strings, r9) are
-    refused loudly — rebuild via save/increments; nothing persisted
-    ships across rounds, so no migration path is warranted."""
-    import os
-    from functools import reduce
-
-    from .index_store import read_manifest
-
-    man = read_manifest(path, "containment_index_load")
-    if man.get("format_version", 1) < 2 and man["cg_dirs"]:
-        raise ValueError(
-            "containment_index_load: store at "
-            f"{path} is format_version {man.get('format_version', 1)} "
-            "(raw gram strings) — rebuild it; v2 persists hashed grams"
-        )
-    if not man["cg_dirs"]:
-        rows = spark.createDataFrame(
-            [],
-            f"id {man.get('id_type', 'bigint')}, sh_size int, "
-            "gram long, is_prefix boolean",
-        )
-        return rows, man
-    masked = _tombstone_masker(path, man, "id")
-    rows = reduce(
-        DataFrame.unionByName,
-        [
-            masked(spark.read.parquet(os.path.join(path, d)), i)
-            for i, d in enumerate(man["cg_dirs"])
-        ],
-    ).select("id", "sh_size", "gram", "is_prefix")
-    return rows, man
+    branch."""
+    return store.load(_CONTAINMENT, spark, path, "containment_index_load")
 
 
 def containment_index_delete(spark, path: str, ids) -> None:
@@ -517,10 +435,7 @@ def containment_index_delete(spark, path: str, ids) -> None:
     from masked loads — they stop generating containment pairs
     immediately and count as not-indexed for later increments;
     ``containment_index_compact`` purges the gram rows physically."""
-    _index_tombstone_delete(
-        path, ids, "containment_index_delete", "cg_dirs",
-        _CONT_IDX_PREFIXES, _containment_idx_artifacts,
-    )
+    store.delete(_CONTAINMENT, path, ids, "containment_index_delete")
 
 
 def containment_index_compact(spark, path: str) -> None:
@@ -528,25 +443,7 @@ def containment_index_compact(spark, path: str) -> None:
     physically; no-op when already compact, all-tombstoned stores keep
     the masked form (the empty-parquet hazard). Prefix flags are
     per-doc facts (order-free validity) so folding preserves them."""
-    from .index_store import commit_manifest, read_manifest
-
-    man = read_manifest(path, "containment_index_compact")
-    if len(man["cg_dirs"]) <= 1 and not man.get("tombstones_file"):
-        return
-    rows, _ = containment_index_load(spark, path)
-    if rows.head() is None:
-        return
-    d = _write_containment_version(rows, path)
-    new_man = dict(man)
-    # ADVICE r10: compaction rewrites every row in v2 hashed-gram form
-    new_man["format_version"] = 2
-    new_man["cg_dirs"] = [d]
-    new_man.pop("tombstones_file", None)
-    new_man.pop("retained", None)
-    commit_manifest(
-        path, new_man,
-        prefixes=_CONT_IDX_PREFIXES, artifacts_fn=_containment_idx_artifacts,
-    )
+    store.compact(_CONTAINMENT, spark, path, "containment_index_compact")
 
 
 def _containment_incr_pairs(
@@ -653,34 +550,22 @@ def containment_dedup_increment(
     stored rows — the store never self-joins, and a stop-word-like
     gram falls out of most prefixes (the PPJoin bound). Returns
     (id_a, id_b, containment_a, containment_b, common)."""
+    op = "containment_dedup_increment"
     rows_idx, man = containment_index_load(spark, path)
-    if man.get("kind") != "containment":
-        raise ValueError(
-            f"containment_dedup_increment: {path} is a "
-            f"{man.get('kind')!r} store, not a containment index"
-        )
+    replay = store.replayed(man, version_tag, op)
     n, threshold = man["n"], man["threshold"]
+    shard_docs = new_docs.select(
+        F.col(id_col).alias("id"), F.col(text_col).alias("__t")
+    )
     # ``_fast_n``: the r13 cascade fast path (see
     # minhash_dedup_increment) — input already checkpointed +
     # contract-validated, count known.
     if _fast_n is None:
-        shard_docs = new_docs.select(
-            F.col(id_col).alias("id"), F.col(text_col).alias("__t")
-        ).localCheckpoint(eager=True)
-        n_shard = _increment_precheck(
-            "containment_dedup_increment", shard_docs, "id", on_existing, "__t"
-        )
+        shard_docs = shard_docs.localCheckpoint(eager=True)
+        n_shard = _increment_precheck(op, shard_docs, "id", on_existing, "__t")
     else:
-        if on_existing not in ("error", "skip"):
-            raise ValueError(
-                "containment_dedup_increment: on_existing must be 'error' "
-                f"or 'skip', got {on_existing!r}"
-            )
-        shard_docs = new_docs.select(
-            F.col(id_col).alias("id"), F.col(text_col).alias("__t")
-        )
         n_shard = _fast_n
-    if version_tag is not None and version_tag in man.get("tags", ()):
+    if replay:
         # REPLAY (the shared version_tag discipline): re-shingle the
         # full shard and pair it against the index MINUS the shard's
         # own gram rows — gram determinism re-emits the original
@@ -693,15 +578,7 @@ def containment_dedup_increment(
             shard_docs.select("id"), "id", "left_anti"
         )
         pairs, _ = _containment_incr_pairs(shingled, idx_replay, threshold)
-        if return_stats:
-            return pairs, {
-                "shard_rows": n_shard,
-                "skipped_existing": 0,
-                "indexed": 0,
-                "appended": False,
-                "replayed": True,
-            }
-        return pairs
+        return _pairs_result(pairs, return_stats, n_shard, replayed=True)
 
     fresh_docs = shard_docs.join(
         rows_idx.select("id").distinct(), "id", "left_anti"
@@ -715,51 +592,17 @@ def containment_dedup_increment(
     n_fresh = shingled.count()  # free: just checkpointed
     skipped = n_shard - n_fresh
     if skipped and on_existing == "error":
-        _raise_already_indexed("containment_dedup_increment", skipped, n_shard)
+        _raise_already_indexed(op, skipped, n_shard)
 
     pairs, shard_grams = _containment_incr_pairs(shingled, rows_idx, threshold)
-
-    appended = False
-    if append and n_fresh > 0:
-        from .index_store import commit_manifest
-
-        def _commit_append():
-            d = _write_containment_version(shard_grams, path)
-            new_man = dict(man)
-            # ADVICE r10: the appended rows are always v2 hashed grams,
-            # so stamp the format — a v1 EMPTY store (pre-r10 init)
-            # otherwise keeps format_version 1 with non-empty v2
-            # cg_dirs and every later load refuses it despite the data
-            # being valid.
-            new_man["format_version"] = 2
-            new_man["cg_dirs"] = man["cg_dirs"] + [d]
-            if version_tag is not None:
-                # replay ledger — compaction's dict(man) copy preserves it
-                new_man["tags"] = list(man.get("tags", [])) + [str(version_tag)]
-            new_man.pop("retained", None)
-            commit_manifest(
-                path, new_man,
-                prefixes=_CONT_IDX_PREFIXES,
-                artifacts_fn=_containment_idx_artifacts,
-            )
-
+    appended = append and n_fresh > 0
+    if appended:
         # r13: overlappable append — shard_grams derives only from the
         # CHECKPOINTED shingle snapshot (concurrent actions on the same
         # immutable frame are thread-safe); see minhash_dedup_increment
-        if _defer_append is not None:
-            _defer_append(_commit_append)
-        else:
-            _commit_append()
-        appended = True
-    if return_stats:
-        return pairs, {
-            "shard_rows": n_shard,
-            "skipped_existing": skipped,
-            "indexed": n_fresh,
-            "appended": appended,
-            "replayed": False,
-        }
-    return pairs
+        store.append(_CONTAINMENT, path, man, shard_grams, version_tag,
+                     _defer_append)
+    return _pairs_result(pairs, return_stats, n_shard, skipped, n_fresh, appended)
 
 
 # ---------------------------------------------------------------------------
@@ -863,6 +706,9 @@ def dedup_cascade_increment(
     # stores must all have been saved over this same id column
     from concurrent.futures import ThreadPoolExecutor
 
+    # checked here once: a shard the exact tier catches in full never
+    # reaches the near tiers' own checks
+    _check_on_existing("dedup_cascade_increment", on_existing)
     shard = new_docs.select(
         F.col(id_col), F.col(text_col).alias("__t")
     ).localCheckpoint(eager=True)
@@ -876,21 +722,17 @@ def dedup_cascade_increment(
     # r13 (guide §2.6): each tier's store APPEND (parquet write +
     # manifest commit) only reads that tier's checkpointed feature
     # frame and touches a store no other tier reads, so it can overlap
-    # the downstream tiers' compute. Every deferred append is awaited
-    # before this function returns — on success before the verdict
-    # frame is handed back, on failure before the error propagates
-    # (run_jobs failure semantics: siblings complete; a retry after a
-    # partial commit is made replay-idempotent per store by
-    # version_tag).
+    # the downstream tiers' compute. Every deferred append finishes
+    # before this function returns or raises — the pool shutdown in the
+    # ``finally`` waits for all of them, so a failed append or tier
+    # never abandons a sibling mid-write (run_jobs failure semantics;
+    # a retry after a partial commit is made replay-idempotent per
+    # store by version_tag).
     pool = ThreadPoolExecutor(max_workers=2)
     append_futures: list = []
 
     def defer(thunk) -> None:
         append_futures.append(pool.submit(thunk))
-
-    def await_appends() -> None:
-        for f in append_futures:
-            f.result()
 
     try:
         # tier 1: exact — survivors keep all original (renamed)
@@ -963,19 +805,10 @@ def dedup_cascade_increment(
                 ),
                 surv3, n3,
             )
-    except BaseException:
-        # surface the compute error, but never abandon in-flight
-        # append threads mid-write (their commits are awaited so the
-        # stores are in a defined state for a version_tag retry)
         for f in append_futures:
-            try:
-                f.result()
-            except BaseException:  # noqa: BLE001 - original error wins
-                pass
+            f.result()  # surface the first failed append
+    finally:
         pool.shutdown(wait=True)
-        raise
-    await_appends()
-    pool.shutdown(wait=True)
 
     # Verdicts as a DISJOINT UNION of the per-tier caught sets plus the
     # kept remainder (r13, guide §2.4: the former 4-way left-join +
@@ -1173,37 +1006,20 @@ def minhash_dedup_pairs(
 # one-generation retention, via operators.index_store.)
 # ---------------------------------------------------------------------------
 
-_MINHASH_PREFIXES = ("sigs-", "bands-", "tombstones-")
-
-
-def _minhash_artifacts(manifest: dict) -> set:
-    arts = set(manifest.get("sig_dirs", [])) | set(manifest.get("band_dirs", []))
-    if manifest.get("tombstones_file"):
-        arts.add(manifest["tombstones_file"])
-    return arts
-
-
-def _write_minhash_version(sigs: DataFrame, path: str, num_bands: int,
-                           rows_per_band: int) -> tuple[str, str]:
-    """Write one uuid-versioned (sigs dir, bands dir) pair. Bands are
-    derived from the signatures via the SAME ``minhash_bands``
-    expression the in-memory join uses and stored partitioned by
-    band_idx (band-parallel scans; each band's keys are uniform
-    xxhash64 values, so partitions are balanced by construction)."""
-    import os
-    import uuid
-
-    from big_data_analysis_spark.io import write_parquet
-
-    ver = uuid.uuid4().hex[:12]
-    sig_dir, band_dir = f"sigs-{ver}", f"bands-{ver}"
-    write_parquet(sigs, os.path.join(path, sig_dir))
-    write_parquet(
-        minhash_bands(sigs, num_bands, rows_per_band),
-        os.path.join(path, band_dir),
-        partition_by=["band_idx"],
-    )
-    return sig_dir, band_dir
+_MINHASH = store.StoreKind("minhash", 1, (
+    store.Group("sig_dirs", "sigs-", "id bigint, signature array<bigint>"),
+    # bands derive from the signatures via the SAME ``minhash_bands``
+    # expression the in-memory join uses, stored partitioned by
+    # band_idx (band-parallel scans; each band's keys are uniform
+    # xxhash64 values, so partitions are balanced by construction)
+    store.Group(
+        "band_dirs", "bands-", "id bigint, band_idx int, band_hash bigint",
+        partition_by=("band_idx",),
+        derive=lambda sigs, man: minhash_bands(
+            sigs, man["num_bands"], man["rows_per_band"]
+        ),
+    ),
+))
 
 
 def minhash_index_save(
@@ -1225,106 +1041,32 @@ def minhash_index_save(
     recorded in the manifest; ``minhash_dedup_increment`` reads them
     from there (a caller cannot accidentally mix 64-hash stored
     signatures with 128-hash fresh ones)."""
-    import os
-
-
     if num_hashes % num_bands:
         raise ValueError(
             f"minhash_index_save: num_hashes ({num_hashes}) must be a "
             f"multiple of num_bands ({num_bands})"
         )
-    rows_per_band = num_hashes // num_bands
-    os.makedirs(path, exist_ok=True)
-    sigs = minhash_signature(df, text_col, id_col, num_hashes, shingle_n)
-    sig_dir, band_dir = _write_minhash_version(sigs, path, num_bands, rows_per_band)
-    commit_manifest(
-        path,
+    store.save(
+        _MINHASH, path,
+        minhash_signature(df, text_col, id_col, num_hashes, shingle_n),
         {
-            "format_version": 1,
-            "kind": "minhash",
             "num_hashes": num_hashes,
             "num_bands": num_bands,
-            "rows_per_band": rows_per_band,
+            "rows_per_band": num_hashes // num_bands,
             "shingle_n": shingle_n,
             "id_col": id_col,
-            "sig_dirs": [sig_dir],
-            "band_dirs": [band_dir],
         },
-        prefixes=_MINHASH_PREFIXES,
-        artifacts_fn=_minhash_artifacts,
     )
-
-
-def _minhash_tombstones(path: str, man: dict):
-    """The (id, scope) tombstone table as a pandas frame, or None.
-    Tombstones are a deletion trickle — the file is tiny and
-    driver-read ONCE per load."""
-    import os
-
-    import pyarrow.parquet as pq_
-
-    tf = man.get("tombstones_file")
-    if not tf:
-        return None
-    return pq_.read_table(os.path.join(path, tf)).to_pandas()
-
-
-def _tombstone_masker(path: str, man: dict, id_field: str):
-    """Per-dir-branch tombstone mask shared by every dedup store load:
-    returns mask(frame, dir_index) that broadcast-anti-joins away ids
-    whose tombstone scope covers that artifact version (dir i existed
-    at delete time iff i < scope). The tombstone table is driver-read
-    ONCE per load."""
-    tombs = _minhash_tombstones(path, man)
-
-    def mask(frame: DataFrame, i: int) -> DataFrame:
-        if tombs is None:
-            return frame
-        dead = tombs.loc[tombs["scope"] > i, "id"].tolist()
-        if not dead:
-            return frame
-        tomb = F.broadcast(
-            frame.sparkSession.createDataFrame(
-                [(v,) for v in dead], frame.select(id_field).schema
-            )
-        )
-        return frame.join(tomb, id_field, "left_anti")
-
-    return mask
 
 
 def minhash_index_load(spark, path: str):
     """Load the persisted signature index lazily: returns
     ``(sigs, bands, manifest)`` where sigs is (id, signature) and
     bands is (id, band_idx, band_hash) — no text scan, no hashing.
-    Multi-version stores union per-dir scans (Spark refuses multi-root
-    reads of separately-partitioned dirs). Tombstoned ids
-    (``minhash_index_delete``) are masked per dir branch with a
-    BROADCAST anti-join scoped to the dirs that existed when the
-    delete committed — a later shard append may legitimately RE-ADD a
-    deleted id (its dir sits past every earlier scope)."""
-    import os
-    from functools import reduce
-
-
-    man = read_manifest(path, "minhash_index_load")
-    _masked = _tombstone_masker(path, man, "id")
-
-    sigs = reduce(
-        DataFrame.unionByName,
-        [
-            _masked(spark.read.parquet(os.path.join(path, d)), i)
-            for i, d in enumerate(man["sig_dirs"])
-        ],
-    ).select("id", "signature")
-    bands = reduce(
-        DataFrame.unionByName,
-        [
-            _masked(spark.read.parquet(os.path.join(path, d)), i)
-            for i, d in enumerate(man["band_dirs"])
-        ],
-    ).select("id", F.col("band_idx").cast("int").alias("band_idx"), "band_hash")
-    return sigs, bands, man
+    Tombstoned ids (``minhash_index_delete``) are masked per dir branch
+    scoped to the dirs that existed when the delete committed — a
+    later shard append may legitimately RE-ADD a deleted id."""
+    return store.load(_MINHASH, spark, path, "minhash_index_load")
 
 
 def _increment_precheck(
@@ -1362,10 +1104,8 @@ def _increment_precheck(
     returned instead of the bare count (contract checks and raise
     order are identical either way).
     """
-    if on_existing is not None and on_existing not in ("error", "skip"):
-        raise ValueError(
-            f"{op}: on_existing must be 'error' or 'skip', got {on_existing!r}"
-        )
+    if on_existing is not None:
+        _check_on_existing(op, on_existing)
     aggs = [
         F.count(F.lit(1)).alias("n"),
         F.count_distinct(F.col(id_col)).alias("n_ids"),
@@ -1389,6 +1129,28 @@ def _increment_precheck(
             "first"
         )
     return pre if extra_aggs is not None else pre["n"]
+
+
+def _check_on_existing(op: str, on_existing: str) -> None:
+    if on_existing not in ("error", "skip"):
+        raise ValueError(
+            f"{op}: on_existing must be 'error' or 'skip', got {on_existing!r}"
+        )
+
+
+def _pairs_result(pairs, return_stats: bool, n_shard: int, skipped: int = 0,
+                  indexed: int = 0, appended: bool = False,
+                  replayed: bool = False):
+    """The near-dup increments' return shape: pairs, or (pairs, stats)."""
+    if not return_stats:
+        return pairs
+    return pairs, {
+        "shard_rows": n_shard,
+        "skipped_existing": skipped,
+        "indexed": indexed,
+        "appended": appended,
+        "replayed": replayed,
+    }
 
 
 def _raise_already_indexed(op: str, skipped: int, n: int) -> None:
@@ -1512,12 +1274,11 @@ def minhash_dedup_increment(
     # Params come from the manifest, never from caller args: stored
     # and fresh signatures must use the same family or the agreement
     # rate is meaningless.
-    sigs_idx, bands_idx, man_probe = minhash_index_load(spark, path)
-    nh = man_probe["num_hashes"]
-    nb = man_probe["num_bands"]
-    rpb = man_probe["rows_per_band"]
-    sn = man_probe["shingle_n"]
-    id_col = man_probe["id_col"]
+    op = "minhash_dedup_increment"
+    sigs_idx, bands_idx, man = minhash_index_load(spark, path)
+    replay = store.replayed(man, version_tag, op)
+    nh, nb, rpb = man["num_hashes"], man["num_bands"], man["rows_per_band"]
+    id_col = man["id_col"]
 
     # ONE shard snapshot feeds the precheck aggregate AND the
     # skip-existing anti-join (ADVICE r8: prechecking the raw frame
@@ -1532,21 +1293,14 @@ def minhash_dedup_increment(
     # (unique non-null ids, non-null text — the cascade's first tier
     # prechecked the superset) and carries its exact row count, so the
     # re-checkpoint job and the precheck aggregate are pure overhead.
+    shard = new_docs.select(id_col, text_col)
     if _fast_n is None:
-        shard = new_docs.select(id_col, text_col).localCheckpoint(eager=True)
-        n_shard = _increment_precheck(
-            "minhash_dedup_increment", shard, id_col, on_existing, text_col
-        )
+        shard = shard.localCheckpoint(eager=True)
+        n_shard = _increment_precheck(op, shard, id_col, on_existing, text_col)
     else:
-        if on_existing not in ("error", "skip"):
-            raise ValueError(
-                "minhash_dedup_increment: on_existing must be 'error' or "
-                f"'skip', got {on_existing!r}"
-            )
-        shard = new_docs.select(id_col, text_col)
         n_shard = _fast_n
 
-    if version_tag is not None and version_tag in man_probe.get("tags", ()):
+    if replay:
         # REPLAY (the fp/dhash/ivfpq version_tag discipline): a prior
         # attempt of this exact shard already committed its tagged
         # signature version, then crashed before the caller's sink
@@ -1558,7 +1312,7 @@ def minhash_dedup_increment(
         # masked (takedown-wins, uniform).
         shard_ids = shard.select(F.col(id_col).alias("id"))
         new_sigs = minhash_signature(
-            shard, text_col, id_col, nh, sn
+            shard, text_col, id_col, nh, man["shingle_n"]
         ).localCheckpoint(eager=True)
         pairs = _minhash_incr_pairs(
             new_sigs,
@@ -1568,15 +1322,7 @@ def minhash_dedup_increment(
             nh,
             threshold,
         )
-        if return_stats:
-            return pairs, {
-                "shard_rows": n_shard,
-                "skipped_existing": 0,
-                "indexed": 0,
-                "appended": False,
-                "replayed": True,
-            }
-        return pairs
+        return _pairs_result(pairs, return_stats, n_shard, replayed=True)
 
     # Skip already-indexed ids BEFORE signing: the anti-join is on ids
     # only, so a re-submitted/overlapping shard never pays the
@@ -1589,80 +1335,32 @@ def minhash_dedup_increment(
         sigs_idx.select(F.col("id").alias(id_col)), id_col, "left_anti"
     )
     new_sigs = minhash_signature(
-        fresh_docs, text_col, id_col, nh, sn
+        fresh_docs, text_col, id_col, nh, man["shingle_n"]
     ).localCheckpoint(eager=True)
     n_fresh = new_sigs.count()  # free: just checkpointed
     # exact: with null text rejected up front, the id anti-join is the
     # only row-dropper between new_docs and new_sigs
     skipped = n_shard - n_fresh
     if skipped and on_existing == "error":
-        _raise_already_indexed("minhash_dedup_increment", skipped, n_shard)
+        _raise_already_indexed(op, skipped, n_shard)
     pairs = _minhash_incr_pairs(
         new_sigs, minhash_bands(new_sigs, nb, rpb),
         sigs_idx, bands_idx, nh, threshold,
     )
-
-    appended = False
-    if append and n_fresh > 0:
-
-        def _commit_append():
-            sig_dir, band_dir = _write_minhash_version(new_sigs, path, nb, rpb)
-            man = dict(man_probe)
-            man["sig_dirs"] = man_probe["sig_dirs"] + [sig_dir]
-            man["band_dirs"] = man_probe["band_dirs"] + [band_dir]
-            if version_tag is not None:
-                # replay ledger — compaction's dict(man) copy preserves it
-                man["tags"] = list(man_probe.get("tags", [])) + [str(version_tag)]
-            man.pop("retained", None)
-            commit_manifest(
-                path,
-                man,
-                prefixes=_MINHASH_PREFIXES,
-                artifacts_fn=_minhash_artifacts,
-            )
-
+    appended = append and n_fresh > 0
+    if appended:
         # r13 (guide §2.6): the append writes only the CHECKPOINTED
         # shard signatures and this store is touched by no other tier,
         # so a cascade may overlap the write/commit with downstream
         # tiers' compute; it awaits every deferred append before
         # returning (and on failure — run_jobs failure semantics).
-        if _defer_append is not None:
-            _defer_append(_commit_append)
-        else:
-            _commit_append()
-        appended = True
-    if return_stats:
-        return pairs, {
-            "shard_rows": n_shard,
-            "skipped_existing": skipped,
-            "indexed": n_fresh,
-            "appended": appended,
-            "replayed": False,
-        }
-    return pairs
+        store.append(_MINHASH, path, man, new_sigs, version_tag, _defer_append)
+    return _pairs_result(pairs, return_stats, n_shard, skipped, n_fresh, appended)
 
 
-_SIMHASH_IDX_PREFIXES = ("shs-", "tombstones-")
-
-
-def _simhash_idx_artifacts(manifest: dict) -> set:
-    arts = set(manifest.get("sh_dirs", []))
-    if manifest.get("tombstones_file"):
-        arts.add(manifest["tombstones_file"])
-    return arts
-
-
-def _write_simhash_version(hashed: DataFrame, path: str) -> str:
-    """Write one uuid-versioned (id, simhash) dir — shared by save and
-    increment (the _write_minhash_version discipline)."""
-    import os
-    import uuid
-
-    from big_data_analysis_spark.io import write_parquet
-
-    sh_dir = f"shs-{uuid.uuid4().hex[:12]}"
-    write_parquet(hashed, os.path.join(path, sh_dir))
-    return sh_dir
+_SIMHASH = store.StoreKind("simhash", 1, (
+    store.Group("sh_dirs", "shs-", "id bigint, simhash bigint"),
+))
 
 
 def simhash_index_save(df: DataFrame, text_col: str, id_col: str, path: str) -> None:
@@ -1674,22 +1372,7 @@ def simhash_index_save(df: DataFrame, text_col: str, id_col: str, path: str) -> 
     banding, whose keys depend on save-time num_bands). Same
     versioned-artifact + atomic manifest discipline as the other
     stores (operators.index_store)."""
-    import os
-
-
-    os.makedirs(path, exist_ok=True)
-    sh_dir = _write_simhash_version(simhash(df, text_col, id_col), path)
-    commit_manifest(
-        path,
-        {
-            "format_version": 1,
-            "kind": "simhash",
-            "id_col": id_col,
-            "sh_dirs": [sh_dir],
-        },
-        prefixes=_SIMHASH_IDX_PREFIXES,
-        artifacts_fn=_simhash_idx_artifacts,
-    )
+    store.save(_SIMHASH, path, simhash(df, text_col, id_col), {"id_col": id_col})
 
 
 def simhash_index_load(spark, path: str):
@@ -1697,20 +1380,7 @@ def simhash_index_load(spark, path: str):
     manifest)``. Multi-version stores union per-dir scans; tombstoned
     ids (``simhash_index_delete``) are masked per dir branch with the
     shared scope semantics (a later append may re-add the id)."""
-    import os
-    from functools import reduce
-
-
-    man = read_manifest(path, "simhash_index_load")
-    masked = _tombstone_masker(path, man, "id")
-    hashed = reduce(
-        DataFrame.unionByName,
-        [
-            masked(spark.read.parquet(os.path.join(path, d)), i)
-            for i, d in enumerate(man["sh_dirs"])
-        ],
-    ).select("id", "simhash")
-    return hashed, man
+    return store.load(_SIMHASH, spark, path, "simhash_index_load")
 
 
 def simhash_index_delete(spark, path: str, ids) -> None:
@@ -1718,10 +1388,7 @@ def simhash_index_delete(spark, path: str, ids) -> None:
     deleted ids at load (no artifact rewrite), a later shard append may
     re-add the id, ``simhash_index_compact`` purges physically. Same
     semantics as minhash_index_delete / ivfpq_delete."""
-    _index_tombstone_delete(
-        path, ids, "simhash_index_delete", "sh_dirs",
-        _SIMHASH_IDX_PREFIXES, _simhash_idx_artifacts,
-    )
+    store.delete(_SIMHASH, path, ids, "simhash_index_delete")
 
 
 def simhash_index_compact(spark, path: str) -> None:
@@ -1729,22 +1396,7 @@ def simhash_index_compact(spark, path: str) -> None:
     tombstoned rows physically and dropping the tombstone file — the
     load-time anti-join disappears. Atomic via the shared index_store
     commit; already-compact stores with no tombstones are a no-op."""
-
-    man = read_manifest(path, "simhash_index_compact")
-    if len(man["sh_dirs"]) <= 1 and not man.get("tombstones_file"):
-        return
-    hashed, _ = simhash_index_load(spark, path)  # masked => purged
-    if hashed.head() is None:
-        return  # all tombstoned: keep the masked form (ivfpq hazard)
-    sh_dir = _write_simhash_version(hashed, path)
-    new_man = dict(man)
-    new_man["sh_dirs"] = [sh_dir]
-    new_man.pop("tombstones_file", None)
-    new_man.pop("retained", None)
-    commit_manifest(
-        path, new_man,
-        prefixes=_SIMHASH_IDX_PREFIXES, artifacts_fn=_simhash_idx_artifacts,
-    )
+    store.compact(_SIMHASH, spark, path, "simhash_index_compact")
 
 
 def _simhash_incr_pairs(
@@ -1805,7 +1457,9 @@ def simhash_dedup_increment(
     into one corrupt fingerprint). ``version_tag``: the shared
     replay-idempotence discipline (see minhash_dedup_increment)."""
 
+    op = "simhash_dedup_increment"
     hashed_idx, man = simhash_index_load(spark, path)
+    replay = store.replayed(man, version_tag, op)
     id_col = man["id_col"]
     # ONE shard snapshot for precheck + anti-join (ADVICE r8: see
     # minhash_dedup_increment — a nondeterministic source would
@@ -1813,21 +1467,14 @@ def simhash_dedup_increment(
     # skipped = n_shard - n_fresh subtraction). ``_fast_n``: the r13
     # cascade fast path (see minhash_dedup_increment) — input already
     # checkpointed + contract-validated, count known.
+    shard = new_docs.select(id_col, text_col)
     if _fast_n is None:
-        shard = new_docs.select(id_col, text_col).localCheckpoint(eager=True)
-        n_shard = _increment_precheck(
-            "simhash_dedup_increment", shard, id_col, on_existing, text_col
-        )
+        shard = shard.localCheckpoint(eager=True)
+        n_shard = _increment_precheck(op, shard, id_col, on_existing, text_col)
     else:
-        if on_existing not in ("error", "skip"):
-            raise ValueError(
-                "simhash_dedup_increment: on_existing must be 'error' or "
-                f"'skip', got {on_existing!r}"
-            )
-        shard = new_docs.select(id_col, text_col)
         n_shard = _fast_n
 
-    if version_tag is not None and version_tag in man.get("tags", ()):
+    if replay:
         # REPLAY (the shared version_tag discipline): re-hash the full
         # shard and pair it against the index MINUS the shard's own
         # ids — hash determinism re-emits the original pairs; partners
@@ -1842,15 +1489,7 @@ def simhash_dedup_increment(
             ),
             max_hamming,
         )
-        if return_stats:
-            return pairs, {
-                "shard_rows": n_shard,
-                "skipped_existing": 0,
-                "indexed": 0,
-                "appended": False,
-                "replayed": True,
-            }
-        return pairs
+        return _pairs_result(pairs, return_stats, n_shard, replayed=True)
 
     fresh_docs = shard.join(
         hashed_idx.select(F.col("id").alias(id_col)), id_col, "left_anti"
@@ -1862,67 +1501,19 @@ def simhash_dedup_increment(
     # up front, so the id anti-join is the only row-dropper here
     skipped = n_shard - n_fresh
     if skipped and on_existing == "error":
-        _raise_already_indexed("simhash_dedup_increment", skipped, n_shard)
+        _raise_already_indexed(op, skipped, n_shard)
     pairs = _simhash_incr_pairs(new_hashed, hashed_idx, max_hamming)
-    appended = False
-    if append and n_fresh > 0:
-
-        def _commit_append():
-            sh_dir = _write_simhash_version(new_hashed, path)
-            new_man = dict(man)
-            new_man["sh_dirs"] = man["sh_dirs"] + [sh_dir]
-            if version_tag is not None:
-                # replay ledger — compaction's dict(man) copy preserves it
-                new_man["tags"] = list(man.get("tags", [])) + [str(version_tag)]
-            new_man.pop("retained", None)
-            commit_manifest(
-                path,
-                new_man,
-                prefixes=_SIMHASH_IDX_PREFIXES,
-                artifacts_fn=_simhash_idx_artifacts,
-            )
-
+    appended = append and n_fresh > 0
+    if appended:
         # r13: overlappable append — see minhash_dedup_increment
-        if _defer_append is not None:
-            _defer_append(_commit_append)
-        else:
-            _commit_append()
-        appended = True
-    if return_stats:
-        return pairs, {
-            "shard_rows": n_shard,
-            "skipped_existing": skipped,
-            "indexed": n_fresh,
-            "appended": appended,
-            "replayed": False,
-        }
-    return pairs
+        store.append(_SIMHASH, path, man, new_hashed, version_tag, _defer_append)
+    return _pairs_result(pairs, return_stats, n_shard, skipped, n_fresh, appended)
 
 
-_FP_PREFIXES = ("fps-", "tombstones-")
-
-
-def _fp_artifacts(manifest: dict) -> set:
-    arts = set(manifest.get("fp_dirs", []))
-    if manifest.get("tombstones_file"):
-        arts.add(manifest["tombstones_file"])
-    return arts
-
-
-def _write_fp_version(fps: DataFrame, path: str, name: str | None = None) -> str:
-    """Write one uuid-versioned fps dir (shared by save and increment
-    so the naming/commit protocol cannot drift between them — the
-    _write_minhash_version discipline). ``name`` overrides the uuid
-    version with a caller-chosen deterministic one (the
-    ``version_tag`` replay-idempotence path)."""
-    import os
-    import uuid
-
-    from big_data_analysis_spark.io import write_parquet
-
-    fp_dir = name or f"fps-{uuid.uuid4().hex[:12]}"
-    write_parquet(fps, os.path.join(path, fp_dir))
-    return fp_dir
+# the fingerprint store tombstones KEEPER ids
+_FINGERPRINT = store.StoreKind("fingerprint", 1, (
+    store.Group("fp_dirs", "fps-", "fp string, keeper_id {id_type}"),
+), id_field="keeper_id")
 
 
 def fingerprint_index_save(
@@ -1936,29 +1527,15 @@ def fingerprint_index_save(
     and a shard refresh needs one fingerprint join instead of
     re-hashing the archive. Same versioned-artifact + atomic manifest
     discipline as the MinHash/IVFPQ stores (operators.index_store)."""
-    import os
-
-
-    os.makedirs(path, exist_ok=True)
     fps = (
         fingerprint(df, text_col, "__fp")
         .groupBy("__fp")
         .agg(F.min(id_col).alias("keeper_id"))
         .select(F.col("__fp").alias("fp"), "keeper_id")
     )
-    fp_dir = _write_fp_version(fps, path)
-    commit_manifest(
-        path,
-        {
-            "format_version": 1,
-            "kind": "fingerprint",
-            "id_col": id_col,
-            "id_type": dict(df.dtypes)[id_col],
-            "fp_dirs": [fp_dir],
-        },
-        prefixes=_FP_PREFIXES,
-        artifacts_fn=_fp_artifacts,
-    )
+    store.save(_FINGERPRINT, path, fps, {
+        "id_col": id_col, "id_type": dict(df.dtypes)[id_col],
+    })
 
 
 def fingerprint_index_init(
@@ -1974,22 +1551,7 @@ def fingerprint_index_init(
     :func:`fingerprint_index_load` materializes it from the recorded
     ``id_type``. Idempotent only in the sense that re-running it resets
     the index to empty — do not call it on a populated store."""
-    import os
-
-
-    os.makedirs(path, exist_ok=True)
-    commit_manifest(
-        path,
-        {
-            "format_version": 1,
-            "kind": "fingerprint",
-            "id_col": id_col,
-            "id_type": id_type,
-            "fp_dirs": [],
-        },
-        prefixes=_FP_PREFIXES,
-        artifacts_fn=_fp_artifacts,
-    )
+    store.init(_FINGERPRINT, path, {"id_col": id_col, "id_type": id_type})
 
 
 def fingerprint_index_load(spark, path: str):
@@ -1997,27 +1559,7 @@ def fingerprint_index_load(spark, path: str):
     where fps is (fp, keeper_id). Across appended versions an fp
     appears at most once by construction (increments only append fps
     NOT already indexed), so the union needs no re-aggregation."""
-    import os
-    from functools import reduce
-
-
-    man = read_manifest(path, "fingerprint_index_load")
-    if not man["fp_dirs"]:
-        # fingerprint_index_init bootstrap: the empty state lives in
-        # the manifest (no unreadable empty parquet dir on disk)
-        fps = spark.createDataFrame(
-            [], f"fp string, keeper_id {man.get('id_type', 'bigint')}"
-        )
-        return fps, man
-    masked = _tombstone_masker(path, man, "keeper_id")
-    fps = reduce(
-        DataFrame.unionByName,
-        [
-            masked(spark.read.parquet(os.path.join(path, d)), i)
-            for i, d in enumerate(man["fp_dirs"])
-        ],
-    ).select("fp", "keeper_id")
-    return fps, man
+    return store.load(_FINGERPRINT, spark, path, "fingerprint_index_load")
 
 
 def fingerprint_index_delete(spark, path: str, ids) -> None:
@@ -2029,10 +1571,7 @@ def fingerprint_index_delete(spark, path: str, ids) -> None:
     under the new shard's id). Deleting a non-keeper id is a harmless
     no-op row. Scoped like the other stores; ``fingerprint_index_compact``
     purges physically."""
-    _index_tombstone_delete(
-        path, ids, "fingerprint_index_delete", "fp_dirs",
-        _FP_PREFIXES, _fp_artifacts,
-    )
+    store.delete(_FINGERPRINT, path, ids, "fingerprint_index_delete")
 
 
 def fingerprint_index_compact(spark, path: str) -> None:
@@ -2044,24 +1583,7 @@ def fingerprint_index_compact(spark, path: str) -> None:
     tagged increment and its replay must not blind the replay
     detection — the replay then re-derives survivors from the
     compacted index instead of the folded-away tagged dir."""
-
-    man = read_manifest(path, "fingerprint_index_compact")
-    if len(man["fp_dirs"]) <= 1 and not man.get("tombstones_file"):
-        return
-    fps, _ = fingerprint_index_load(spark, path)  # masked => purged
-    if fps.head() is None:
-        # Every row tombstoned: writing the empty frame would publish a
-        # schema-less (unreadable) dir and brick the index (the
-        # ivfpq_compact hazard) — keep the masked form instead.
-        return
-    fp_dir = _write_fp_version(fps, path)
-    new_man = dict(man)
-    new_man["fp_dirs"] = [fp_dir]
-    new_man.pop("tombstones_file", None)
-    new_man.pop("retained", None)
-    commit_manifest(
-        path, new_man, prefixes=_FP_PREFIXES, artifacts_fn=_fp_artifacts,
-    )
+    store.compact(_FINGERPRINT, spark, path, "fingerprint_index_compact")
 
 
 def exact_dedup_increment(
@@ -2102,13 +1624,12 @@ def exact_dedup_increment(
     its own fingerprints and silently returned zero survivors), and a
     call that finds its tag already committed — the crashed-between-
     fp-append-and-sink-publish interleaving — re-derives the ORIGINAL
-    survivors instead: shard rows whose (fp, id) is a tagged keeper,
-    read from the tagged dir with the TOMBSTONE MASK applied (VERDICT
-    r8: a takedown racing the crash-recovery window must not be
-    re-admitted), or from the full masked index when compaction has
-    absorbed the tagged dir (sound because an id enters the store
-    through exactly one increment — the exactly-once source contract —
-    so a (fp, id) keeper match can only come from THIS shard's first
+    survivors instead: shard rows whose (fp, id) is a keeper of the
+    MASKED index (VERDICT r8: a takedown racing the crash-recovery
+    window must not be re-admitted; sound wherever compaction has
+    moved the tagged rows, because an id enters the store through
+    exactly one increment — the exactly-once source contract — so a
+    (fp, id) keeper match can only come from THIS shard's first
     attempt). Requires the replayed shard to be byte-identical to the
     first attempt (Spark's replayable-source contract).
 
@@ -2116,20 +1637,9 @@ def exact_dedup_increment(
     id); the shard-vs-index join shuffles on the fp hash — uniform
     keys — and AQE broadcasts whichever side is small. The archive
     text is never re-read."""
-    import os
-    import re
-
-
     fps_idx, man = fingerprint_index_load(spark, path)
+    replay = store.replayed(man, version_tag, "exact_dedup_increment")
     id_col = man["id_col"]
-    tag_dir = None
-    if version_tag is not None:
-        if not re.fullmatch(r"[A-Za-z0-9_.-]+", str(version_tag)):
-            raise ValueError(
-                f"exact_dedup_increment: version_tag {version_tag!r} must "
-                "match [A-Za-z0-9_.-]+ (it becomes an artifact dir name)"
-            )
-        tag_dir = f"fps-tag-{version_tag}"
     # Checkpoint the fingerprinted SHARD, not just the winners: the
     # survivors join and the winners aggregate must see the SAME rows
     # even when new_docs is nondeterministic across jobs (a limit()
@@ -2163,35 +1673,20 @@ def exact_dedup_increment(
             "replayed": replayed,
         }
 
-    if tag_dir is not None and (
-        version_tag in man.get("tags", ()) or tag_dir in man["fp_dirs"]
-    ):
+    if replay:
         # REPLAY: a prior attempt of this exact shard already committed
         # its fp version (then crashed before the caller's sink publish).
         # The anti-join below would now see the shard's own fingerprints
         # in the index and return zero survivors — so re-derive the
         # original survivors instead: a shard row survives iff its
-        # (fp, id) is a tagged keeper. Tombstones are MASKED (VERDICT
-        # r8: a takedown that deleted one of the tagged keepers between
-        # the crash and the replay must not see its row re-admitted and
-        # published). When compaction has folded the tagged dir away
-        # (detected via the tags ledger), the keepers live on in the
-        # compacted dir with identical (fp, keeper_id) values, so the
-        # semi-join runs against the full masked index — equivalent
-        # because an id is presented to the store by exactly one
-        # increment (exactly-once source contract).
-        if tag_dir in man["fp_dirs"]:
-            masked = _tombstone_masker(path, man, "keeper_id")
-            tagged = masked(
-                spark.read.parquet(os.path.join(path, tag_dir)),
-                man["fp_dirs"].index(tag_dir),
-            )
-        else:
-            tagged = fps_idx
-        tagged = tagged.select(
+        # (fp, id) is a keeper of the masked index (VERDICT r8: a
+        # takedown that deleted one of the tagged keepers between the
+        # crash and the replay must not see its row re-admitted and
+        # published).
+        keepers = fps_idx.select(
             F.col("fp").alias("__fp"), F.col("keeper_id").alias(id_col)
         )
-        survivors = fp_new.join(tagged, ["__fp", id_col], "left_semi").drop(
+        survivors = fp_new.join(keepers, ["__fp", id_col], "left_semi").drop(
             "__fp"
         )
         n_surv = survivors.count() if return_stats else 0
@@ -2210,95 +1705,14 @@ def exact_dedup_increment(
     survivors = fp_new.join(
         winners.select(id_col), id_col, "left_semi"
     ).drop("__fp")
-    appended = False
-    if append and n_winners > 0:
-
-        def _commit_append():
-            fp_dir = _write_fp_version(
-                winners.select(
-                    F.col("__fp").alias("fp"), F.col(id_col).alias("keeper_id")
-                ),
-                path,
-                name=tag_dir,
-            )
-            new_man = dict(man)
-            new_man["fp_dirs"] = man["fp_dirs"] + [fp_dir]
-            if version_tag is not None:
-                # the replay ledger compaction preserves: one short string
-                # per tagged batch (a retention policy, if ever needed at
-                # billions of batches, belongs to the orchestrator)
-                new_man["tags"] = list(man.get("tags", [])) + [str(version_tag)]
-            new_man.pop("retained", None)
-            commit_manifest(
-                path,
-                new_man,
-                prefixes=_FP_PREFIXES,
-                artifacts_fn=_fp_artifacts,
-            )
-
+    appended = append and n_winners > 0
+    if appended:
         # r13: overlappable append — winners is checkpointed; see
         # minhash_dedup_increment for the deferral contract
-        if _defer_append is not None:
-            _defer_append(_commit_append)
-        else:
-            _commit_append()
-        appended = True
+        store.append(_FINGERPRINT, path, man, winners.select(
+            F.col("__fp").alias("fp"), F.col(id_col).alias("keeper_id")
+        ), version_tag, _defer_append)
     return _result(survivors, n_winners, appended)
-
-
-def _index_tombstone_delete(
-    path: str,
-    ids,
-    op: str,
-    dirs_key: str,
-    prefixes,
-    artifacts_fn,
-) -> None:
-    """Shared tombstone-delete commit for every dedup store: validate
-    ids (sequence or 1-column DataFrame), consolidate with any existing
-    tombstones at max-scope-per-id (a re-deleted id must mask every dir
-    that exists NOW, superseding its earlier, narrower tombstone),
-    write the new tombstones parquet and repoint the manifest. Empty id
-    sets are a no-op (no version bump)."""
-    import os
-    import uuid
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq_
-
-
-    man = read_manifest(path, op)
-    if isinstance(ids, DataFrame):
-        if len(ids.columns) != 1:
-            raise ValueError(
-                f"{op}: ids DataFrame must have exactly one column, "
-                f"got {ids.columns}"
-            )
-        id_values = [r[0] for r in ids.distinct().collect()]
-    else:
-        id_values = list(dict.fromkeys(ids))
-    id_values = [v for v in id_values if v is not None]
-    if not id_values:
-        return  # manifest untouched
-    scope = len(man[dirs_key])
-    new = pd.DataFrame({"id": id_values, "scope": scope})
-    old = _minhash_tombstones(path, man)
-    if old is not None:
-        new = (
-            pd.concat([old, new], ignore_index=True)
-            .groupby("id", as_index=False)["scope"]
-            .max()
-        )
-    tf = f"tombstones-{uuid.uuid4().hex[:12]}.parquet"
-    pq_.write_table(
-        pa.Table.from_pandas(new, preserve_index=False),
-        os.path.join(path, tf),
-    )
-    new_man = dict(man)
-    new_man["tombstones_file"] = tf
-    new_man.pop("retained", None)
-    commit_manifest(path, new_man, prefixes=prefixes, artifacts_fn=artifacts_fn)
 
 
 def minhash_index_delete(spark, path: str, ids) -> None:
@@ -2315,10 +1729,7 @@ def minhash_index_delete(spark, path: str, ids) -> None:
     not-indexed). ``minhash_index_compact`` purges tombstoned rows
     physically and drops the file. ``ids``: a Python sequence or a
     1-column DataFrame; empty = no-op, no version bump."""
-    _index_tombstone_delete(
-        path, ids, "minhash_index_delete", "sig_dirs",
-        _MINHASH_PREFIXES, _minhash_artifacts,
-    )
+    store.delete(_MINHASH, path, ids, "minhash_index_delete")
 
 
 def minhash_index_compact(spark, path: str) -> None:
@@ -2327,37 +1738,14 @@ def minhash_index_compact(spark, path: str) -> None:
     ``ivfpq_compact``: after N nightly shard appends every increment
     pays N source listings and N union branches per side; compaction
     restores the single-scan plan without re-reading any TEXT:
-    signature rows are copied as-is, band keys re-derived from them
-    (deterministic xxhash over the stored arrays — identical values,
-    no corpus scan). Atomic: merged dirs land under a
+    signature rows are copied as-is (tombstoned rows purged), band keys
+    re-derived from them (deterministic xxhash over the stored arrays —
+    identical values, no corpus scan). Atomic: merged dirs land under a
     fresh version, the manifest repoints in one rename, a torn
     compaction leaves the old manifest fully servable, and the
     superseded generation survives one more commit (index_store
     retention grace)."""
-
-    man = read_manifest(path, "minhash_index_compact")
-    if len(man["sig_dirs"]) <= 1 and not man.get("tombstones_file"):
-        return  # already compact, nothing to purge
-    # minhash_index_load applies the tombstone masking, so the merged
-    # dir is written with deletions PURGED and the tombstone file is
-    # dropped from the manifest (the per-load anti-join disappears).
-    sigs, _, _ = minhash_index_load(spark, path)
-    if sigs.head() is None:
-        return  # all tombstoned: keep the masked form (ivfpq hazard)
-    sig_dir, band_dir = _write_minhash_version(
-        sigs, path, man["num_bands"], man["rows_per_band"]
-    )
-    new_man = dict(man)
-    new_man["sig_dirs"] = [sig_dir]
-    new_man["band_dirs"] = [band_dir]
-    new_man.pop("tombstones_file", None)
-    new_man.pop("retained", None)
-    commit_manifest(
-        path,
-        new_man,
-        prefixes=_MINHASH_PREFIXES,
-        artifacts_fn=_minhash_artifacts,
-    )
+    store.compact(_MINHASH, spark, path, "minhash_index_compact")
 
 
 # ---------------------------------------------------------------------------
@@ -3202,25 +2590,10 @@ def _split_threshold(test_fraction: float, buckets: int) -> int:
     return math.ceil(test_fraction * buckets - 1e-9)
 
 
-_SPLIT_PREFIXES = ("split-", "tombstones-")
-
-
-def _split_artifacts(manifest: dict) -> set:
-    arts = set(manifest.get("split_dirs", []))
-    if manifest.get("tombstones_file"):
-        arts.add(manifest["tombstones_file"])
-    return arts
-
-
-def _write_split_version(rows: DataFrame, path: str) -> str:
-    import os
-    import uuid
-
-    from big_data_analysis_spark.io import write_parquet
-
-    d = f"split-{uuid.uuid4().hex[:12]}"
-    write_parquet(rows, os.path.join(path, d))
-    return d
+_SPLIT = store.StoreKind("leakage_split", 1, (
+    store.Group("split_dirs", "split-",
+                "id {id_type}, fp string, group_key {id_type}, split string"),
+))
 
 
 def split_index_save(
@@ -3248,9 +2621,6 @@ def split_index_save(
     artifact + atomic manifest protocol as the other dedup stores
     (operators.index_store). ~70 bytes per doc; at 100 TB / 10^10
     docs that is a sub-TB side table read via one fp-bucketed join."""
-    import os
-
-    os.makedirs(path, exist_ok=True)
     # _keep_fp: the split already fingerprints every row — reusing its
     # __fp column halves the full-corpus text-normalization work
     # (review r9) vs re-deriving it here
@@ -3264,22 +2634,13 @@ def split_index_save(
         "group_key",
         "split",
     )
-    d = _write_split_version(rows, path)
-    commit_manifest(
-        path,
-        {
-            "format_version": 1,
-            "kind": "leakage_split",
-            "id_col": id_col,
-            "id_type": dict(df.dtypes)[id_col],
-            "test_fraction": test_fraction,
-            "seed": seed,
-            "buckets": buckets,
-            "split_dirs": [d],
-        },
-        prefixes=_SPLIT_PREFIXES,
-        artifacts_fn=_split_artifacts,
-    )
+    store.save(_SPLIT, path, rows, {
+        "id_col": id_col,
+        "id_type": dict(df.dtypes)[id_col],
+        "test_fraction": test_fraction,
+        "seed": seed,
+        "buckets": buckets,
+    })
 
 
 def split_index_load(spark, path: str):
@@ -3288,19 +2649,7 @@ def split_index_load(spark, path: str):
     ever split through this store. Tombstoned ids
     (``split_index_delete``) are masked per artifact-dir branch, the
     shared store discipline."""
-    import os
-    from functools import reduce
-
-    man = read_manifest(path, "split_index_load")
-    masked = _tombstone_masker(path, man, "id")
-    rows = reduce(
-        DataFrame.unionByName,
-        [
-            masked(spark.read.parquet(os.path.join(path, d)), i)
-            for i, d in enumerate(man["split_dirs"])
-        ],
-    ).select("id", "fp", "group_key", "split")
-    return rows, man
+    return store.load(_SPLIT, spark, path, "split_index_load")
 
 
 def split_index_delete(spark, path: str, ids) -> None:
@@ -3316,10 +2665,7 @@ def split_index_delete(spark, path: str, ids) -> None:
     ``group_key`` values remaining rows carry are opaque labels; a
     deleted keeper id keeps labeling its group. Scoped like the other
     stores; ``split_index_compact`` purges physically."""
-    _index_tombstone_delete(
-        path, ids, "split_index_delete", "split_dirs",
-        _SPLIT_PREFIXES, _split_artifacts,
-    )
+    store.delete(_SPLIT, path, ids, "split_index_delete")
 
 
 def split_index_compact(spark, path: str) -> None:
@@ -3328,20 +2674,7 @@ def split_index_compact(spark, path: str) -> None:
     compaction half shared by every store. No-op when already compact
     and tombstone-free; all-tombstoned stores keep the masked form
     (the empty-parquet hazard)."""
-    man = read_manifest(path, "split_index_compact")
-    if len(man["split_dirs"]) <= 1 and not man.get("tombstones_file"):
-        return
-    rows, _ = split_index_load(spark, path)  # masked => purged
-    if rows.head() is None:
-        return
-    d = _write_split_version(rows, path)
-    new_man = dict(man)
-    new_man["split_dirs"] = [d]
-    new_man.pop("tombstones_file", None)
-    new_man.pop("retained", None)
-    commit_manifest(
-        path, new_man, prefixes=_SPLIT_PREFIXES, artifacts_fn=_split_artifacts,
-    )
+    store.compact(_SPLIT, spark, path, "split_index_compact")
 
 
 def leakage_split_increment(
@@ -3613,17 +2946,9 @@ def leakage_split_increment(
             F.col(id_col).alias("id"), F.col("__fp").alias("fp"),
             "group_key", "split",
         )
-        n_add = to_add.count()
-        if n_add > 0:
-            d = _write_split_version(to_add, path)
-            new_man = dict(man)
-            new_man["split_dirs"] = man["split_dirs"] + [d]
-            new_man.pop("retained", None)
-            commit_manifest(
-                path, new_man,
-                prefixes=_SPLIT_PREFIXES, artifacts_fn=_split_artifacts,
-            )
-            appended = True
+        appended = to_add.count() > 0
+        if appended:
+            store.append(_SPLIT, path, man, to_add)
     result = out.drop("__fp")
     if return_stats:
         return result, {

@@ -8,7 +8,7 @@ cascade (``dedup.dedup_cascade_increment`` — exact → MinHash → SimHash
 → containment, survivors flowing down); image / audio / video rows are
 fingerprinted by their modality's REAL decode (image dHash, audio
 spectral contour, video temporal-majority dHash) and deduped against
-their modality's `_FpStoreCfg` store via the shared increment contract.
+their modality's index_store media store via the shared increment contract.
 One ``version_tag`` fans out to EVERY store's replay ledger, so a crash
 anywhere inside the mixed refresh replays cleanly — committed stores
 re-emit their original pairs, uncommitted ones run fresh — exactly the

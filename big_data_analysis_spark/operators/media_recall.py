@@ -8,7 +8,7 @@ the later tiers' stores. The mixed-modality cascade
 (``media_cascade.media_cascade_increment``) routes text rows through
 that same four-tier cascade, so a mixed corpus INHERITS the blind spot
 on its text arm; the media arms do not share it structurally — each
-`_FpStoreCfg` store indexes EVERY successfully fingerprinted doc (there
+index_store media store indexes EVERY successfully fingerprinted doc (there
 is no survivor flow between media tiers: image, audio, and video are
 disjoint single-tier stores).
 
@@ -60,7 +60,7 @@ _MEDIA_SEED_FNS = {
 def _seed_media_store(kind: str, seed: DataFrame, path: str,
                       content_col: str, id_col: str) -> None:
     """Fingerprint a raw (id, content) seed and save it as ``kind``'s
-    `_FpStoreCfg` store; decode failures never enter an archive."""
+    index_store media store; decode failures never enter an archive."""
     fingerprint, save = _MEDIA_SEED_FNS[kind]
     hashed = fingerprint(seed, content_col, id_col)
     err_col = hashed.columns[-1]

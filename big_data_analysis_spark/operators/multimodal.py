@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from . import index_store as store
+
 #: Output schema of the decode stage: one row per media item.
 DECODE_SCHEMA = StructType(
     [
@@ -1100,82 +1102,40 @@ def synthesize_perturbed_pgms(
 
 # ---------------------------------------------------------------------------
 # Persisted perceptual-fingerprint index + incremental near-dup dedup:
-# ONE store protocol (versioned artifacts, atomic manifest, tombstone
-# masking — the text-store discipline) shared by the image dHash tier
-# and the audio spectral-fingerprint tier. Both persist 16-byte
-# (id, 64-bit hash) rows and both pair through the SAME Manku hamming
-# join as the text SimHash store; a config names the manifest kind, the
-# fingerprint column, and the artifact prefix so the two stores stay
-# self-describing and mutually un-mixable.
+# the image dHash, audio and video tiers each own an index_store kind
+# of 16-byte (id, 64-bit hash) rows, and all pair through the SAME
+# Manku hamming join as the text SimHash store. Distinct kind / column
+# / prefix per modality keep the stores self-describing and mutually
+# un-mixable.
 # ---------------------------------------------------------------------------
 
-from collections import namedtuple as _namedtuple
 
-_FpStoreCfg = _namedtuple("_FpStoreCfg", "kind fp_col dirs_key dir_prefix")
-
-#: Image store: unchanged on-disk layout from its r9 introduction.
-_DHASH_CFG = _FpStoreCfg("dhash", "dhash", "dh_dirs", "dhs-")
-#: Audio store: same layout, distinct kind/column/prefix.
-_AUDIO_FP_CFG = _FpStoreCfg("audiofp", "afp", "afp_dirs", "afp-")
-
-_FP_TOMBSTONE_PREFIX = "tombstones-"
+def _media_store(kind: str, dirs_key: str, prefix: str, fp_col: str):
+    return store.StoreKind(kind, 1, (
+        store.Group(dirs_key, prefix, f"id {{id_type}}, {fp_col} long"),
+    ))
 
 
-def _fp_idx_prefixes(cfg: _FpStoreCfg) -> tuple:
-    return (cfg.dir_prefix, _FP_TOMBSTONE_PREFIX)
+def _fp_col(spec) -> str:
+    return spec.groups[0].fields[1][0]  # rows are (id, <fingerprint>)
 
 
-def _fp_idx_artifacts(cfg: _FpStoreCfg):
-    def artifacts(manifest: dict) -> set:
-        arts = set(manifest.get(cfg.dirs_key, []))
-        if manifest.get("tombstones_file"):
-            arts.add(manifest["tombstones_file"])
-        return arts
-
-    return artifacts
+_DHASH = _media_store("dhash", "dh_dirs", "dhs-", "dhash")
+_AUDIO_FP = _media_store("audiofp", "afp_dirs", "afp-", "afp")
 
 
-def _write_fp_version(
-    cfg: _FpStoreCfg, rows: DataFrame, path: str, name: str | None = None
-) -> str:
-    import os
-    import uuid
-
-    from big_data_analysis_spark.io import write_parquet
-
-    d = name if name is not None else f"{cfg.dir_prefix}{uuid.uuid4().hex[:12]}"
-    write_parquet(rows.select("id", cfg.fp_col), os.path.join(path, d))
-    return d
-
-
-def _fp_precheck(
-    cfg: _FpStoreCfg, op: str, hashed: DataFrame, on_existing: str | None
-) -> int:
-    """The shared increment shard contract for (id, hash) rows:
+def _media_index_save(
+    spec, hashed: DataFrame, path: str, id_col: str, op: str, init_name: str,
+) -> None:
+    """Save (id, hash) rows after the shared increment shard contract —
     unique non-null ids, NON-NULL fingerprint (a decode-error row has
     no fingerprint to index — filter error rows out first, the
-    corrupt-tolerance flow), on_existing in {'error','skip'}. ONE
-    aggregate — ``_increment_precheck`` folds the null-payload count
-    in via its ``text_col`` slot (review r9: a separate count was a
-    second full pass over a possibly-lazy decode+hash frame); returns
-    the shard row count."""
+    corrupt-tolerance flow) — in ONE aggregate."""
     from .dedup import _increment_precheck
 
-    return _increment_precheck(op, hashed, "id", on_existing, cfg.fp_col)
-
-
-def _fp_index_save(
-    cfg: _FpStoreCfg, hashed: DataFrame, path: str, id_col: str, op: str,
-    init_name: str,
-) -> None:
-    import os
-
-    from .index_store import commit_manifest
-
-    os.makedirs(path, exist_ok=True)
-    rows = hashed.select(F.col(id_col).alias("id"), cfg.fp_col)
-    n = _fp_precheck(cfg, op, rows, None)
-    if n == 0:
+    fp_col = _fp_col(spec)
+    rows = hashed.select(F.col(id_col).alias("id"), fp_col)
+    if _increment_precheck(op, rows, "id", None, fp_col) == 0:
         # writing a zero-row frame would publish a part-less,
         # schema-less parquet dir and brick every later load (the
         # fingerprint_index_init hazard) — start-from-zero pipelines
@@ -1184,100 +1144,9 @@ def _fp_index_save(
             f"{op}: empty input — bootstrap an empty store "
             f"with {init_name} and grow it by increments"
         )
-    d = _write_fp_version(cfg, rows, path)
-    commit_manifest(
-        path,
-        {
-            "format_version": 1,
-            "kind": cfg.kind,
-            "id_col": id_col,
-            "id_type": dict(hashed.dtypes)[id_col],
-            cfg.dirs_key: [d],
-        },
-        prefixes=_fp_idx_prefixes(cfg),
-        artifacts_fn=_fp_idx_artifacts(cfg),
-    )
-
-
-def _fp_index_init(
-    cfg: _FpStoreCfg, spark, path: str, id_col: str, id_type: str
-) -> None:
-    import os
-
-    from .index_store import commit_manifest
-
-    os.makedirs(path, exist_ok=True)
-    commit_manifest(
-        path,
-        {
-            "format_version": 1,
-            "kind": cfg.kind,
-            "id_col": id_col,
-            "id_type": id_type,
-            cfg.dirs_key: [],
-        },
-        prefixes=_fp_idx_prefixes(cfg),
-        artifacts_fn=_fp_idx_artifacts(cfg),
-    )
-
-
-def _fp_index_load(cfg: _FpStoreCfg, spark, path: str, op: str):
-    import os
-    from functools import reduce
-
-    from .dedup import _tombstone_masker
-    from .index_store import read_manifest
-
-    man = read_manifest(path, op)
-    if man.get("kind") != cfg.kind:
-        raise ValueError(
-            f"{op}: index at {path} has kind {man.get('kind')!r}, "
-            f"expected {cfg.kind!r} — wrong store for this tier"
-        )
-    if not man[cfg.dirs_key]:
-        # init bootstrap: empty state lives in the manifest
-        rows = spark.createDataFrame(
-            [], f"id {man.get('id_type', 'bigint')}, {cfg.fp_col} long"
-        )
-        return rows, man
-    masked = _tombstone_masker(path, man, "id")
-    rows = reduce(
-        DataFrame.unionByName,
-        [
-            masked(spark.read.parquet(os.path.join(path, d)), i)
-            for i, d in enumerate(man[cfg.dirs_key])
-        ],
-    ).select("id", cfg.fp_col)
-    return rows, man
-
-
-def _fp_index_delete(cfg: _FpStoreCfg, path: str, ids, op: str) -> None:
-    from .dedup import _index_tombstone_delete
-
-    _index_tombstone_delete(
-        path, ids, op, cfg.dirs_key,
-        _fp_idx_prefixes(cfg), _fp_idx_artifacts(cfg),
-    )
-
-
-def _fp_index_compact(cfg: _FpStoreCfg, spark, path: str, op: str) -> None:
-    from .index_store import commit_manifest, read_manifest
-
-    man = read_manifest(path, op)
-    if len(man[cfg.dirs_key]) <= 1 and not man.get("tombstones_file"):
-        return
-    rows, _ = _fp_index_load(cfg, spark, path, op)
-    if rows.head() is None:
-        return
-    d = _write_fp_version(cfg, rows, path)
-    new_man = dict(man)
-    new_man[cfg.dirs_key] = [d]
-    new_man.pop("tombstones_file", None)
-    new_man.pop("retained", None)
-    commit_manifest(
-        path, new_man,
-        prefixes=_fp_idx_prefixes(cfg), artifacts_fn=_fp_idx_artifacts(cfg),
-    )
+    store.save(spec, path, rows, {
+        "id_col": id_col, "id_type": dict(hashed.dtypes)[id_col],
+    })
 
 
 def dhash_index_save(hashed: DataFrame, path: str, id_col: str = "id") -> None:
@@ -1287,9 +1156,8 @@ def dhash_index_save(hashed: DataFrame, path: str, id_col: str = "id") -> None:
     in ~160 GB, and a shard refresh needs one fingerprint join instead
     of re-decoding any archive image. Same versioned-artifact +
     atomic-manifest discipline as the text stores."""
-    _fp_index_save(
-        _DHASH_CFG, hashed, path, id_col, "dhash_index_save",
-        "dhash_index_init",
+    _media_index_save(
+        _DHASH, hashed, path, id_col, "dhash_index_save", "dhash_index_init"
     )
 
 
@@ -1301,13 +1169,13 @@ def dhash_index_init(
     grows by increments (the fingerprint_index_init discipline: the
     empty state lives purely in the manifest; an empty parquet dir
     would be unreadable)."""
-    _fp_index_init(_DHASH_CFG, spark, path, id_col, id_type)
+    store.init(_DHASH, path, {"id_col": id_col, "id_type": id_type})
 
 
 def dhash_index_load(spark, path: str):
     """Load the persisted fingerprint index lazily: ``(rows, manifest)``
     where rows is (id, dhash); tombstoned ids masked per dir branch."""
-    return _fp_index_load(_DHASH_CFG, spark, path, "dhash_index_load")
+    return store.load(_DHASH, spark, path, "dhash_index_load")
 
 
 def dhash_index_delete(spark, path: str, ids) -> None:
@@ -1315,14 +1183,14 @@ def dhash_index_delete(spark, path: str, ids) -> None:
     tombstoned ids vanish from masked loads — they stop generating
     near-dup pairs immediately and count as not-indexed for a later
     increment. ``dhash_index_compact`` purges physically."""
-    _fp_index_delete(_DHASH_CFG, path, ids, "dhash_index_delete")
+    store.delete(_DHASH, path, ids, "dhash_index_delete")
 
 
 def dhash_index_compact(spark, path: str) -> None:
     """Fold appended (id, dhash) versions into ONE dir, purging
     tombstones physically; no-op when already compact, all-tombstoned
     stores keep the masked form (the empty-parquet hazard)."""
-    _fp_index_compact(_DHASH_CFG, spark, path, "dhash_index_compact")
+    store.compact(_DHASH, spark, path, "dhash_index_compact")
 
 
 def audio_fp_index_save(hashed: DataFrame, path: str, id_col: str = "id") -> None:
@@ -1330,8 +1198,8 @@ def audio_fp_index_save(hashed: DataFrame, path: str, id_col: str = "id") -> Non
     (``audio_fingerprint`` output — filter ``afp_error`` rows first;
     NULL afp raises). 16 bytes/clip, same versioned-artifact +
     atomic-manifest discipline as the image and text stores."""
-    _fp_index_save(
-        _AUDIO_FP_CFG, hashed, path, id_col, "audio_fp_index_save",
+    _media_index_save(
+        _AUDIO_FP, hashed, path, id_col, "audio_fp_index_save",
         "audio_fp_index_init",
     )
 
@@ -1341,27 +1209,27 @@ def audio_fp_index_init(
 ) -> None:
     """Commit an EMPTY audio-fingerprint index (``afp_dirs: []``) —
     the start-from-zero bootstrap, uniform with every other store."""
-    _fp_index_init(_AUDIO_FP_CFG, spark, path, id_col, id_type)
+    store.init(_AUDIO_FP, path, {"id_col": id_col, "id_type": id_type})
 
 
 def audio_fp_index_load(spark, path: str):
     """Load the persisted audio-fingerprint index lazily:
     ``(rows, manifest)`` where rows is (id, afp); tombstoned ids
     masked per dir branch."""
-    return _fp_index_load(_AUDIO_FP_CFG, spark, path, "audio_fp_index_load")
+    return store.load(_AUDIO_FP, spark, path, "audio_fp_index_load")
 
 
 def audio_fp_index_delete(spark, path: str, ids) -> None:
     """Takedown path for the audio store (the uniform GDPR semantics):
     tombstoned ids vanish from masked loads immediately;
     ``audio_fp_index_compact`` purges physically."""
-    _fp_index_delete(_AUDIO_FP_CFG, path, ids, "audio_fp_index_delete")
+    store.delete(_AUDIO_FP, path, ids, "audio_fp_index_delete")
 
 
 def audio_fp_index_compact(spark, path: str) -> None:
     """Fold appended (id, afp) versions into ONE dir, purging
     tombstones physically; no-op when already compact."""
-    _fp_index_compact(_AUDIO_FP_CFG, spark, path, "audio_fp_index_compact")
+    store.compact(_AUDIO_FP, spark, path, "audio_fp_index_compact")
 
 
 def image_dedup_increment(
@@ -1405,7 +1273,7 @@ def image_dedup_increment(
     one scan of the 16-byte/image store bucketed on the combo keys;
     AQE broadcasts the small shard side."""
     return _fp_dedup_increment(
-        _DHASH_CFG, spark, new_hashed, path, max_hamming, id_col, append,
+        _DHASH, spark, new_hashed, path, max_hamming, id_col, append,
         on_existing, return_stats, version_tag, "image_dedup_increment",
     )
 
@@ -1429,13 +1297,13 @@ def audio_dedup_increment(
     vs batch ``audio_near_dup_pairs``; version_tag replay idempotence.
     See :func:`image_dedup_increment` for the full contract text."""
     return _fp_dedup_increment(
-        _AUDIO_FP_CFG, spark, new_hashed, path, max_hamming, id_col, append,
+        _AUDIO_FP, spark, new_hashed, path, max_hamming, id_col, append,
         on_existing, return_stats, version_tag, "audio_dedup_increment",
     )
 
 
 def _fp_dedup_increment(
-    cfg: _FpStoreCfg,
+    spec,
     spark,
     new_hashed: DataFrame,
     path: str,
@@ -1448,52 +1316,24 @@ def _fp_dedup_increment(
     op: str,
 ):
     from .dedup import (
+        _increment_precheck,
+        _pairs_result,
         _raise_already_indexed,
-        simhash_candidate_pairs,
-        simhash_pairs_between,
+        _simhash_incr_pairs,
     )
-    from .index_store import commit_manifest
 
-    idx, man = _fp_index_load(cfg, spark, path, op)
+    fp_col = _fp_col(spec)
+    idx, man = store.load(spec, spark, path, op)
+    replay = store.replayed(man, version_tag, op)
     shard = new_hashed.select(
-        F.col(id_col).alias("id"), cfg.fp_col
+        F.col(id_col).alias("id"), fp_col
     ).localCheckpoint(eager=True)
-    n_shard = _fp_precheck(cfg, op, shard, on_existing)
+    n_shard = _increment_precheck(op, shard, "id", on_existing, fp_col)
 
-    def _hamming_pairs(probe_fp: DataFrame, index_fp: DataFrame) -> DataFrame:
-        nn = simhash_candidate_pairs(probe_fp, max_hamming)
-        ni = simhash_pairs_between(probe_fp, index_fp, max_hamming)
-        cands = nn.select("id_a", "id_b", "h_a", "h_b").unionByName(
-            ni.select("id_a", "id_b", "h_a", "h_b")
-        )
-        if max_hamming <= 0:
-            return cands.select("id_a", "id_b", F.lit(0).alias("hamming"))
-        return (
-            cands.withColumn(
-                "hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-            )
-            .filter(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming")
-        )
+    def as_simhash(frame: DataFrame) -> DataFrame:
+        return frame.select("id", F.col(fp_col).alias("simhash"))
 
-    def _result(pairs, skipped, n_fresh, appended, replayed=False):
-        if not return_stats:
-            return pairs
-        return pairs, {
-            "shard_rows": n_shard,
-            "skipped_existing": skipped,
-            "indexed": n_fresh,
-            "appended": appended,
-            "replayed": replayed,
-        }
-
-    tag_dir = (
-        None if version_tag is None
-        else f"{cfg.dir_prefix}tag-{version_tag}"
-    )
-    if tag_dir is not None and (
-        version_tag in man.get("tags", ()) or tag_dir in man[cfg.dirs_key]
-    ):
+    if replay:
         # REPLAY (the fp store's version_tag discipline): a prior
         # attempt of this exact shard already committed its tagged
         # fingerprint version, then crashed before the caller's sink
@@ -1509,12 +1349,10 @@ def _fp_dedup_increment(
         # tombstoned inside the crash window, which the masked load
         # already hides: takedown-wins, uniform with the fp store.
         idx_replay = idx.join(shard.select("id"), "id", "left_anti")
-        pairs = _hamming_pairs(
-            shard.select("id", F.col(cfg.fp_col).alias("simhash")),
-            idx_replay.select("id", F.col(cfg.fp_col).alias("simhash")),
+        pairs = _simhash_incr_pairs(
+            as_simhash(shard), as_simhash(idx_replay), max_hamming
         )
-        return _result(pairs, skipped=0, n_fresh=0, appended=False,
-                       replayed=True)
+        return _pairs_result(pairs, return_stats, n_shard, replayed=True)
 
     fresh = shard.join(idx.select("id"), "id", "left_anti").localCheckpoint(
         eager=True
@@ -1524,25 +1362,8 @@ def _fp_dedup_increment(
     if skipped and on_existing == "error":
         _raise_already_indexed(op, skipped, n_shard)
 
-    pairs = _hamming_pairs(
-        fresh.select("id", F.col(cfg.fp_col).alias("simhash")),
-        idx.select("id", F.col(cfg.fp_col).alias("simhash")),
-    )
-    appended = False
-    if append and n_fresh > 0:
-        d = _write_fp_version(cfg, fresh, path, name=tag_dir)
-        new_man = dict(man)
-        new_man[cfg.dirs_key] = man[cfg.dirs_key] + [d]
-        if version_tag is not None:
-            # replay ledger — the compact path's dict(man) copy
-            # preserves it, so a compaction landing between a crashed
-            # tagged increment and its replay cannot blind detection
-            new_man["tags"] = list(man.get("tags", [])) + [str(version_tag)]
-        new_man.pop("retained", None)
-        commit_manifest(
-            path, new_man,
-            prefixes=_fp_idx_prefixes(cfg),
-            artifacts_fn=_fp_idx_artifacts(cfg),
-        )
-        appended = True
-    return _result(pairs, skipped, n_fresh, appended)
+    pairs = _simhash_incr_pairs(as_simhash(fresh), as_simhash(idx), max_hamming)
+    appended = append and n_fresh > 0
+    if appended:
+        store.append(spec, path, man, fresh, version_tag)
+    return _pairs_result(pairs, return_stats, n_shard, skipped, n_fresh, appended)

@@ -23,8 +23,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _increment_precheck, _raise_already_indexed
-from .index_store import commit_manifest
+from . import index_store as store
+from .dedup import _increment_precheck, _pairs_result, _raise_already_indexed
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -904,6 +904,15 @@ def ivfpq_topk_filtered(
     return _exact_l2_rerank(rerank_with, shortlist, q, id_col, vec_col, k)
 
 
+# encoded rows keep every stored column (id_col, cell, pq_code and the
+# metadata columns); tombstones mask the manifest's id_col
+_IVFPQ = store.StoreKind(
+    "ivfpq", 3,
+    (store.Group("encoded_dirs", "encoded-", None, partition_by=("cell",)),),
+    id_field=None, file=("codebooks_file", "codebooks-"),
+)
+
+
 def ivfpq_save(
     encoded: DataFrame,
     centroids: list[list[float]],
@@ -937,17 +946,16 @@ def ivfpq_save(
                               (single-writer discipline; a reader
                               racing a re-save should retry its load).
 
+    The manifest's ``version`` names this save (the codebooks token);
+    appends, deletes and compactions keep it.
+
     ``id_col``: recorded in the manifest for the serving session;
     defaults to the encoded frame's first column (ivfpq_build's
     layout)."""
-    import json
     import os
-    import shutil
     import uuid
 
     import numpy as np
-
-    from big_data_analysis_spark.io import write_parquet
 
     if id_col is None:
         id_col = encoded.columns[0]
@@ -958,19 +966,15 @@ def ivfpq_save(
         )
     os.makedirs(path, exist_ok=True)
     ver = uuid.uuid4().hex[:12]
-    encoded_dir = f"encoded-{ver}"
     codebooks_file = f"codebooks-{ver}.npz"
-    write_parquet(encoded, os.path.join(path, encoded_dir), partition_by=["cell"])
     np.savez(
         os.path.join(path, codebooks_file),
         centroids=np.asarray(centroids, dtype=np.float64),
         codebooks=np.asarray(codebooks, dtype=np.float64),
     )
     m, kk, d_sub = np.asarray(codebooks).shape
-    manifest = {
-        "format_version": 3,
+    store.save(_IVFPQ, path, encoded, {
         "version": ver,
-        "encoded_dirs": [encoded_dir],
         "codebooks_file": codebooks_file,
         "n_cells": len(centroids),
         "dim": len(centroids[0]) if centroids else 0,
@@ -980,67 +984,29 @@ def ivfpq_save(
             c for c in encoded.columns if c not in (id_col, "cell", "pq_code")
         ],
         "id_col": id_col,
-    }
-    _commit_index_manifest(path, manifest)
+    })
 
 
-def _manifest_artifacts(manifest: dict) -> set:
-    """The versioned artifact names a manifest references directly
-    (encoded dirs + codebooks + tombstones) — NOT its grace-retained
-    set, which belongs to the PREVIOUS version."""
-    live = set(manifest.get("encoded_dirs", [])) | {manifest["codebooks_file"]}
-    if manifest.get("tombstones_file"):
-        live.add(manifest["tombstones_file"])
-    return live
+def _load_codebooks(path: str, manifest: dict):
+    """(centroids as lists, codebooks ndarray) from the manifest's
+    codebooks artifact."""
+    import os
 
+    import numpy as np
 
-def _commit_index_manifest(path: str, manifest: dict) -> None:
-    """Atomically publish the manifest with a ONE-VERSION retention
-    grace: artifacts referenced by the manifest being superseded are
-    kept (recorded under ``retained``) and deleted only on the commit
-    AFTER next. ``ivfpq_load`` returns a LAZY DataFrame — a frame
-    loaded just before a re-save/compact must still execute afterwards
-    (ADVICE r6: immediate deletion broke exactly that, single-process
-    included). Frames held across MORE than one re-save must be
-    eagerly materialized by the caller — that contract is now one
-    commit wide, not zero. Shared protocol: operators.index_store
-    (also backs the MinHash signature index)."""
-
-    commit_manifest(
-        path,
-        manifest,
-        prefixes=("encoded-", "codebooks-", "tombstones-"),
-        artifacts_fn=_manifest_artifacts,
-    )
+    arrs = np.load(os.path.join(path, manifest["codebooks_file"]))
+    return [[float(x) for x in c] for c in arrs["centroids"]], arrs["codebooks"]
 
 
 def ivfpq_load(spark, path: str):
     """Load a persisted IVFADC index: (encoded DataFrame, centroids
     list, codebooks ndarray) — no k-means, no PQ training, no scan of
     the corpus; the parquet store loads lazily with its cell
-    partitioning intact. Raises FileNotFoundError when the manifest is
-    absent (a torn save never published one)."""
-    import json
-    import os
-
-    import numpy as np
-
-    mpath = os.path.join(path, "_INDEX.json")
-    if not os.path.exists(mpath):
-        raise FileNotFoundError(
-            f"ivfpq_load: no _INDEX.json under {path} — not a committed "
-            "IVFPQ index (torn save, or wrong path)"
-        )
-    with open(mpath, encoding="utf-8") as fh:
-        manifest = json.load(fh)
-    # format_version 1 used unversioned artifact names; 2 a single
-    # versioned encoded_dir; 3+ a LIST of encoded dirs (the base save
-    # plus any appended deltas — see ivfpq_append).
-    arrs = np.load(
-        os.path.join(path, manifest.get("codebooks_file", "codebooks.npz"))
-    )
-    centroids = [[float(x) for x in c] for c in arrs["centroids"]]
-    codebooks = arrs["codebooks"]
+    partitioning intact, base + appended deltas unioned and tombstoned
+    ids masked per dir branch. Raises FileNotFoundError when the
+    manifest is absent (a torn save never published one)."""
+    encoded, manifest = store.load(_IVFPQ, spark, path, "ivfpq_load")
+    centroids, codebooks = _load_codebooks(path, manifest)
     if len(centroids) != manifest["n_cells"] or codebooks.shape[:2] != (
         manifest["m"],
         manifest["k"],
@@ -1048,90 +1014,7 @@ def ivfpq_load(spark, path: str):
         raise ValueError(
             f"ivfpq_load: artifact shapes disagree with manifest {manifest}"
         )
-    dirs = manifest.get(
-        "encoded_dirs", [manifest.get("encoded_dir", "encoded")]
-    )
-    encoded = _read_encoded_dirs(
-        spark,
-        path,
-        dirs,
-        tombstones=_read_tombstones(spark, path, manifest),
-        id_col=manifest.get("id_col", "vec_id"),
-    )
     return encoded, centroids, codebooks
-
-
-def _load_index_manifest(path: str, op: str) -> dict:
-    """Read a committed index manifest for a mutating lifecycle op,
-    raising the shared error shapes: FileNotFoundError when no commit
-    ever landed (torn save / wrong path), ValueError when the manifest
-    predates the encoded_dirs list (format < 3 — one re-save upgrades
-    it). ``op`` names the caller in the error text."""
-    import json
-    import os
-
-    mpath = os.path.join(path, "_INDEX.json")
-    if not os.path.exists(mpath):
-        raise FileNotFoundError(
-            f"{op}: no _INDEX.json under {path} — save a base index "
-            "first (ivfpq_save)"
-        )
-    with open(mpath, encoding="utf-8") as fh:
-        manifest = json.load(fh)
-    if "encoded_dirs" not in manifest:
-        raise ValueError(
-            f"{op}: index was saved by an older ivfpq_save (no "
-            "encoded_dirs); re-save it once to upgrade the manifest"
-        )
-    return manifest
-
-
-def _read_tombstones(spark, path: str, manifest: dict) -> DataFrame | None:
-    """The committed tombstone set (``ivfpq_delete``), or None when the
-    index has no deletions. Columns: ``id`` (the deleted key) and
-    ``scope`` (how many encoded dirs existed at delete time — the
-    RocksDB-sequence-number trick that lets a later append RE-ADD the
-    id without the old tombstone hiding the new row)."""
-    import os
-
-    tf = manifest.get("tombstones_file")
-    if not tf:
-        return None
-    return spark.read.parquet(os.path.join(path, tf))
-
-
-def _read_encoded_dirs(
-    spark,
-    path: str,
-    dirs: list[str],
-    tombstones: DataFrame | None = None,
-    id_col: str | None = None,
-) -> DataFrame:
-    """One scan per base/delta dir unioned by name (Spark refuses a
-    single multi-root read of separately-partitioned stores); a cell
-    predicate prunes EACH branch's source listing independently, so
-    probes stay ∝ nprobe × cell across base + deltas. THE store-reading
-    convention shared by load, append's skip-existing scan, and
-    compaction.
-
-    Tombstone masking is PER BRANCH: a tombstone with ``scope`` = s
-    masks only dirs[0:s] — the dirs that existed when the delete
-    committed — so a row re-appended in a later delta stays visible.
-    The tombstone set is broadcast (deletes are a trickle next to the
-    store; a bulk purge should re-save instead), so masking adds no
-    shuffle to the probe path."""
-    import os
-
-    encoded = None
-    for i, d in enumerate(dirs):
-        part = spark.read.parquet(os.path.join(path, d))
-        if tombstones is not None:
-            mask = tombstones.filter(F.col("scope") > i).select(
-                F.col("id").cast(part.schema[id_col].dataType).alias(id_col)
-            )
-            part = part.join(F.broadcast(mask), id_col, "left_anti")
-        encoded = part if encoded is None else encoded.unionByName(part)
-    return encoded
 
 
 def _assign_to_cells(batch: DataFrame, vec_col: str, bc_cents) -> DataFrame:
@@ -1205,14 +1088,23 @@ def ivfpq_append(
     store discipline that lets ``semantic_dedup_increment`` detect a
     replayed exactly-once micro-batch even after a compaction folds
     the tagged delta dir away."""
-    import os
-    import uuid
+    existing, manifest = store.load(_IVFPQ, spark, path, "ivfpq_append")
+    _append_loaded(
+        spark, path, manifest, new_embeddings, vec_col,
+        existing if skip_existing else None, version_tag,
+    )
 
+
+def _append_loaded(
+    spark, path: str, manifest: dict, new_embeddings: DataFrame, vec_col: str,
+    existing: DataFrame | None, version_tag: str | None,
+) -> None:
+    """``ivfpq_append`` against an already loaded manifest; ``existing``
+    (the masked store) turns on the skip-existing anti-join."""
     import numpy as np
 
-    from big_data_analysis_spark.io import write_parquet
-
-    manifest = _load_index_manifest(path, "ivfpq_append")
+    if store.replayed(manifest, version_tag, "ivfpq_append"):
+        return  # this tagged batch already committed
     id_col = manifest["id_col"]
     missing = [
         c
@@ -1224,9 +1116,7 @@ def ivfpq_append(
             f"ivfpq_append: new_embeddings is missing column(s) {missing} "
             "recorded in the index manifest"
         )
-    arrs = np.load(os.path.join(path, manifest["codebooks_file"]))
-    centroids = [[float(x) for x in c] for c in arrs["centroids"]]
-    codebooks = arrs["codebooks"]
+    centroids, codebooks = _load_codebooks(path, manifest)
     dim = manifest["dim"]
     stats = new_embeddings.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1267,7 +1157,7 @@ def ivfpq_append(
     keep = list(dict.fromkeys([id_col, vec_col, *manifest["metadata_cols"]]))
     batch = new_embeddings.select(*keep)
     we_persisted_batch = False
-    if skip_existing:
+    if existing is not None:
         # Exact replay-safety: drop ids the store already holds (an
         # orchestrator retrying a committed batch must not double-index
         # every row — duplicate ids would crowd real neighbors out of
@@ -1277,20 +1167,15 @@ def ivfpq_append(
         # id is not "existing" — re-appending it must insert (the new
         # delta dir sits past the tombstone's scope, so the old rows
         # stay hidden while the new one serves).
-        existing = _read_encoded_dirs(
-            spark,
-            path,
-            manifest["encoded_dirs"],
-            tombstones=_read_tombstones(spark, path, manifest),
-            id_col=id_col,
-        ).select(id_col)
         # Persist the surviving batch: the emptiness probe below and
         # the delta write must see ONE computation of the anti-join —
         # otherwise the store's id column is scanned twice per append,
         # and a nondeterministic input could pass the probe yet write
         # zero rows, publishing an empty (schema-less, unreadable)
         # delta dir into the manifest.
-        batch = batch.join(existing, id_col, "left_anti").persist()
+        batch = batch.join(
+            existing.select(id_col), id_col, "left_anti"
+        ).persist()
         we_persisted_batch = True
         if batch.select(id_col).head() is None:
             batch.unpersist()
@@ -1307,26 +1192,13 @@ def ivfpq_append(
     delta = pq_encode(with_res, bc_books, emb_col="__residual").select(
         id_col, "cell", "pq_code", *manifest["metadata_cols"]
     )
-    ver = uuid.uuid4().hex[:12]
-    delta_dir = (
-        f"encoded-tag-{version_tag}" if version_tag is not None
-        else f"encoded-{ver}"
-    )
     try:
-        write_parquet(delta, os.path.join(path, delta_dir), partition_by=["cell"])
+        store.append(_IVFPQ, path, manifest, delta, version_tag)
     finally:
         bc_cents.destroy()  # the write is the only action referencing them
         bc_books.destroy()
         if we_persisted_batch:
             batch.unpersist()
-    manifest = {
-        **manifest,
-        "version": ver,
-        "encoded_dirs": [*manifest["encoded_dirs"], delta_dir],
-    }
-    if version_tag is not None:
-        manifest["tags"] = [*manifest.get("tags", []), str(version_tag)]
-    _commit_index_manifest(path, manifest)
 
 
 def ivfpq_delete(spark, path: str, ids) -> None:
@@ -1353,47 +1225,7 @@ def ivfpq_delete(spark, path: str, ids) -> None:
     ``ids``: a Python sequence of id values, or a 1-column DataFrame.
     Deleting an id the store does not hold is a harmless no-op row;
     an empty id set leaves the index untouched (no version bump)."""
-    import os
-    import uuid
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq_
-
-    manifest = _load_index_manifest(path, "ivfpq_delete")
-    if isinstance(ids, DataFrame):
-        if len(ids.columns) != 1:
-            raise ValueError(
-                f"ivfpq_delete: ids DataFrame must have exactly one "
-                f"column, got {ids.columns}"
-            )
-        id_values = [r[0] for r in ids.distinct().collect()]
-    else:
-        id_values = list(dict.fromkeys(ids))
-    id_values = [v for v in id_values if v is not None]
-    if not id_values:
-        return  # nothing to delete: manifest untouched
-    scope = len(manifest["encoded_dirs"])
-    new = pd.DataFrame({"id": id_values, "scope": scope})
-    old_tf = manifest.get("tombstones_file")
-    if old_tf:
-        old = pq_.read_table(os.path.join(path, old_tf)).to_pandas()
-        # max scope per id: a re-deleted id must mask every dir that
-        # exists NOW, superseding its earlier, narrower tombstone.
-        new = (
-            pd.concat([old, new], ignore_index=True)
-            .groupby("id", as_index=False)["scope"]
-            .max()
-        )
-    ver = uuid.uuid4().hex[:12]
-    tf = f"tombstones-{ver}.parquet"
-    pq_.write_table(
-        pa.Table.from_pandas(new, preserve_index=False),
-        os.path.join(path, tf),
-    )
-    _commit_index_manifest(
-        path, {**manifest, "version": ver, "tombstones_file": tf}
-    )
+    store.delete(_IVFPQ, path, ids, "ivfpq_delete")
 
 
 def ivfpq_compact(spark, path: str) -> None:
@@ -1408,61 +1240,10 @@ def ivfpq_compact(spark, path: str) -> None:
     Atomic like save/append: the merged dir is written under a fresh
     version, the manifest repoints in one rename, and a torn compaction
     leaves the old manifest (and all its dirs + tombstones) fully
-    servable."""
-    import json
-    import os
-    import uuid
-
-    from big_data_analysis_spark.io import write_parquet
-
-    mpath = os.path.join(path, "_INDEX.json")
-    with open(mpath, encoding="utf-8") as fh:
-        manifest = json.load(fh)
-    if "encoded_dirs" not in manifest:
-        if "codebooks_file" not in manifest:
-            # Format 1 (unversioned artifacts): the post-commit cleanup
-            # keys on codebooks_file, so proceeding would crash AFTER
-            # the commit point and orphan the old 'encoded' dir forever.
-            raise ValueError(
-                "ivfpq_compact: index was saved by a format-1 ivfpq_save "
-                "(no codebooks_file); re-save it once to upgrade"
-            )
-        # Format 2 (versioned single encoded_dir): already physically
-        # compact — upgrade the manifest in place to format 3 so
-        # ivfpq_append works, without copying any data.
-        manifest = {
-            **{k: v for k, v in manifest.items() if k != "encoded_dir"},
-            "format_version": 3,
-            "encoded_dirs": [manifest["encoded_dir"]],
-        }
-        _commit_index_manifest(path, manifest)
-        return
-    dirs = manifest["encoded_dirs"]
-    if len(dirs) <= 1 and not manifest.get("tombstones_file"):
-        return  # already compact, nothing to purge
-    merged = _read_encoded_dirs(
-        spark,
-        path,
-        dirs,
-        tombstones=_read_tombstones(spark, path, manifest),
-        id_col=manifest.get("id_col", "vec_id"),
-    )
-    if merged.head() is None:
-        # Every surviving row is tombstoned: writing the empty merged
-        # frame would publish a schema-less (unreadable) dir and BRICK
-        # the index for every later load. Keep the masked form — the
-        # index stays servable with zero visible rows, and a future
-        # append past the tombstones' scope revives it.
-        return
-    ver = uuid.uuid4().hex[:12]
-    merged_dir = f"encoded-{ver}"
-    write_parquet(merged, os.path.join(path, merged_dir), partition_by=["cell"])
-    manifest = {
-        **{k: v for k, v in manifest.items() if k != "tombstones_file"},
-        "version": ver,
-        "encoded_dirs": [merged_dir],
-    }
-    _commit_index_manifest(path, manifest)
+    servable. Every row tombstoned: the masked form stays (an empty
+    merged dir would be schema-less and brick the index), and a future
+    append past the tombstones' scope revives it."""
+    store.compact(_IVFPQ, spark, path, "ivfpq_compact")
 
 
 def semantic_dedup_pairs(
@@ -1617,7 +1398,7 @@ def _enforce_cell_cap(
 
 def _sem_incr_pairs(
     assigned: DataFrame,
-    store: DataFrame,
+    members: DataFrame,
     id_col: str,
     vec_col: str,
     threshold: float,
@@ -1634,7 +1415,7 @@ def _sem_incr_pairs(
     )
     nn = sa.join(sb, "cell").filter(F.col("id_a") < F.col("id_b"))
     ni = sa.join(
-        store.select(
+        members.select(
             F.col("cell").cast("int").alias("cell"),
             F.col(id_col).alias("id_b"),
             F.col(vec_col).alias("vb"),
@@ -1716,7 +1497,10 @@ def semantic_dedup_increment(
 
     import numpy as np
 
-    manifest = _load_index_manifest(path, "semantic_dedup_increment")
+    op = "semantic_dedup_increment"
+    # stored members, tombstones masked: (id, cell, vector)
+    store_rows, manifest = store.load(_IVFPQ, spark, path, op)
+    replay = store.replayed(manifest, version_tag, op)
     id_col = manifest["id_col"]
     if vec_col not in manifest["metadata_cols"]:
         raise ValueError(
@@ -1758,20 +1542,13 @@ def semantic_dedup_increment(
             f"{vec_col}, a null element, or dim != {dim}"
         )
 
-    # stored members, tombstones masked: (id, cell, vector)
-    store = _read_encoded_dirs(
-        spark,
-        path,
-        manifest["encoded_dirs"],
-        tombstones=_read_tombstones(spark, path, manifest),
-        id_col=id_col,
-    ).select(id_col, "cell", vec_col)
+    members = store_rows.select(id_col, "cell", vec_col)
     arrs = np.load(os.path.join(path, manifest["codebooks_file"]))
     bc_cents = spark.sparkContext.broadcast(
         np.asarray(arrs["centroids"], dtype=np.float64)
     )
 
-    if version_tag is not None and version_tag in manifest.get("tags", ()):
+    if replay:
         # REPLAY (the fp/dhash store discipline): a prior attempt of
         # this exact shard already committed its tagged delta, then
         # crashed before the caller's sink publish. Recomputing against
@@ -1790,19 +1567,11 @@ def semantic_dedup_increment(
             )
         finally:
             bc_cents.destroy()
-        store_replay = store.join(shard.select(id_col), id_col, "left_anti")
-        pairs = _sem_incr_pairs(assigned, store_replay, id_col, vec_col, threshold)
-        if return_stats:
-            return pairs, {
-                "shard_rows": n_shard,
-                "skipped_existing": 0,
-                "indexed": 0,
-                "appended": False,
-                "replayed": True,
-            }
-        return pairs
+        members_replay = members.join(shard.select(id_col), id_col, "left_anti")
+        pairs = _sem_incr_pairs(assigned, members_replay, id_col, vec_col, threshold)
+        return _pairs_result(pairs, return_stats, n_shard, replayed=True)
 
-    fresh = shard.join(store.select(id_col), id_col, "left_anti")
+    fresh = shard.join(members.select(id_col), id_col, "left_anti")
     try:
         # ONE eager materialization of the assigned shard, carrying
         # every store column: the candidate joins, the stats count AND
@@ -1823,31 +1592,19 @@ def semantic_dedup_increment(
     if skipped and on_existing == "error":
         _raise_already_indexed("semantic_dedup_increment", skipped, n_shard)
 
-    pairs = _sem_incr_pairs(assigned, store, id_col, vec_col, threshold)
+    pairs = _sem_incr_pairs(assigned, members, id_col, vec_col, threshold)
 
-    appended = False
-    if append and n_fresh > 0:
-        # skip_existing=False: the anti-join already ran against the
+    appended = append and n_fresh > 0
+    if appended:
+        # no skip-existing scan: the anti-join already ran against the
         # masked store, and `assigned` is the materialized snapshot —
         # no second store id scan, no source re-evaluation (the extra
         # cell column is dropped by the append's keep-list select; the
         # append re-derives cells itself, one redundant O(shard·dim)
         # pass, so its assignment can never drift from the store's
         # conventions)
-        ivfpq_append(
-            spark, path, assigned, vec_col=vec_col, skip_existing=False,
-            version_tag=version_tag,
-        )
-        appended = True
-    if return_stats:
-        return pairs, {
-            "shard_rows": n_shard,
-            "skipped_existing": skipped,
-            "indexed": n_fresh,
-            "appended": appended,
-            "replayed": False,
-        }
-    return pairs
+        _append_loaded(spark, path, manifest, assigned, vec_col, None, version_tag)
+    return _pairs_result(pairs, return_stats, n_shard, skipped, n_fresh, appended)
 
 
 def rrf_fuse(

@@ -28,7 +28,7 @@ SAME config-parameterized fingerprint store as the image and audio
 tiers (16 bytes/clip before anything shuffles).
 
 This module deliberately lives OUTSIDE multimodal.py: it only REUSES
-the shared `_FpStoreCfg` store lifecycle and `dhash_bits` (VERDICT r10
+the shared media-store lifecycle and `dhash_bits` (VERDICT r10
 next-round #1 — new operators in new modules so the driver-verified
 queries of unchanged modules stay green).
 """
@@ -48,21 +48,18 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from big_data_analysis_spark.operators import index_store as store
 from big_data_analysis_spark.operators.multimodal import (
-    _FpStoreCfg,
     _fp_dedup_increment,
-    _fp_index_compact,
-    _fp_index_delete,
-    _fp_index_init,
-    _fp_index_load,
-    _fp_index_save,
+    _media_index_save,
+    _media_store,
     dhash_bits,
 )
 
-#: Video store: the shared fingerprint-store layout with its own
-#: manifest kind / fingerprint column / artifact prefix, so video state
-#: can never be mixed into an image or audio store.
-_VIDEO_FP_CFG = _FpStoreCfg("videofp", "vfp", "vfp_dirs", "vfp-")
+#: Video store: the shared media-store layout with its own manifest
+#: kind / fingerprint column / artifact prefix, so video state can
+#: never be mixed into an image or audio store.
+_VIDEO_FP = _media_store("videofp", "vfp_dirs", "vfp-", "vfp")
 
 
 # ---------------------------------------------------------------------------
@@ -300,7 +297,7 @@ def video_near_dup_pairs(hashed: DataFrame, max_hamming: int = 3) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Persisted video-fingerprint store: the shared `_FpStoreCfg` lifecycle
+# Persisted video-fingerprint store: the shared media-store lifecycle
 # verbatim (versioned artifacts, atomic manifest, tombstone masking,
 # version_tag replay) — audio inherited the image store's certified
 # semantics this way in r10; video inherits them identically.
@@ -312,8 +309,8 @@ def video_fp_index_save(hashed: DataFrame, path: str, id_col: str = "id") -> Non
     clip (``video_fingerprint`` output — filter ``vfp_error`` rows
     first; NULL vfp raises). 16 bytes/clip, same versioned-artifact +
     atomic-manifest discipline as the image, audio, and text stores."""
-    _fp_index_save(
-        _VIDEO_FP_CFG, hashed, path, id_col, "video_fp_index_save",
+    _media_index_save(
+        _VIDEO_FP, hashed, path, id_col, "video_fp_index_save",
         "video_fp_index_init",
     )
 
@@ -323,27 +320,27 @@ def video_fp_index_init(
 ) -> None:
     """Commit an EMPTY video-fingerprint index (``vfp_dirs: []``) — the
     start-from-zero bootstrap, uniform with every other store."""
-    _fp_index_init(_VIDEO_FP_CFG, spark, path, id_col, id_type)
+    store.init(_VIDEO_FP, path, {"id_col": id_col, "id_type": id_type})
 
 
 def video_fp_index_load(spark, path: str):
     """Load the persisted video-fingerprint index lazily:
     ``(rows, manifest)`` where rows is (id, vfp); tombstoned ids masked
     per dir branch."""
-    return _fp_index_load(_VIDEO_FP_CFG, spark, path, "video_fp_index_load")
+    return store.load(_VIDEO_FP, spark, path, "video_fp_index_load")
 
 
 def video_fp_index_delete(spark, path: str, ids) -> None:
     """Takedown path for the video store (the uniform GDPR semantics):
     tombstoned ids vanish from masked loads immediately;
     ``video_fp_index_compact`` purges physically."""
-    _fp_index_delete(_VIDEO_FP_CFG, path, ids, "video_fp_index_delete")
+    store.delete(_VIDEO_FP, path, ids, "video_fp_index_delete")
 
 
 def video_fp_index_compact(spark, path: str) -> None:
     """Fold appended (id, vfp) versions into ONE dir, purging
     tombstones physically; no-op when already compact."""
-    _fp_index_compact(_VIDEO_FP_CFG, spark, path, "video_fp_index_compact")
+    store.compact(_VIDEO_FP, spark, path, "video_fp_index_compact")
 
 
 def video_dedup_increment(
@@ -366,7 +363,7 @@ def video_dedup_increment(
     See ``multimodal.image_dedup_increment`` for the full contract
     text."""
     return _fp_dedup_increment(
-        _VIDEO_FP_CFG, spark, new_hashed, path, max_hamming, id_col, append,
+        _VIDEO_FP, spark, new_hashed, path, max_hamming, id_col, append,
         on_existing, return_stats, version_tag, "video_dedup_increment",
     )
 

@@ -2771,7 +2771,7 @@ def q_media_cascade_increment_docs(spark: SparkSession, sf_dir: str) -> DataFram
     planted classes + 11 clips each of image/audio/video at planted
     perturbation levels) runs media_cascade_increment against seven
     seeded stores — text fp/MinHash/SimHash/containment plus the three
-    `_FpStoreCfg` media stores — and every verdict (kind, first
+    index_store media stores — and every verdict (kind, first
     catching tier, kept) is re-derived by DuckDB from id arithmetic:
     unique-token text bases make the text tier closed-form, and the
     media fixtures' nested-flip levels make a catch exactly
@@ -3420,7 +3420,7 @@ def q_video_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental VIDEO near-dup dedup against the persisted
     fingerprint store, hash-verified row-for-row: clips < 100 are
     decoded+hashed once and persisted (video_fp_index_save, 16
-    bytes/clip — the shared `_FpStoreCfg` lifecycle with its own
+    bytes/clip — the shared index_store lifecycle with its own
     manifest kind); the arriving shard (ids 100-199) is hashed alone
     and video_dedup_increment returns exactly the pairs of a batch run
     over store ∪ shard RESTRICTED to pairs touching the shard — the

@@ -357,77 +357,237 @@ def test_exact_dedup_increment_version_tag_replay(spark, docs, request):
         dd.exact_dedup_increment(spark, b1, "text", path, version_tag="a/b")
 
 
-def test_fp_and_simhash_index_delete_compact_lifecycle(spark, request):
-    """The exact-fingerprint and SimHash stores carry the same
-    takedown lifecycle as the MinHash/IVFPQ ones: scoped tombstones
-    mask at load (no artifact rewrite), identical text becomes
-    re-ingestable after an fp keeper delete, a later append re-adds,
-    and compact purges physically + drops the tombstone file."""
+def _scratch_path(name: str) -> str:
+    """A pid-scoped work dir under the checkout's ``.scratch``."""
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return os.path.join(repo, ".scratch", f"{name}-{os.getpid()}")
+
+
+def _fp_keeper_reingest(spark, fpp, rows):
+    """Fingerprint store: a deleted KEEPER's (id 2) identical text
+    becomes re-ingestable, the increment re-indexes it, and the same
+    text arriving again dies against the re-indexed fp."""
+    dup0 = spark.createDataFrame(
+        [(100, rows[2][1])], "doc_id long, text string"
+    )
+    surv = dd.exact_dedup_increment(spark, dup0, "text", fpp)
+    assert [r["doc_id"] for r in surv.collect()] == [100]
+    assert dd.exact_dedup_increment(
+        spark,
+        spark.createDataFrame([(200, rows[2][1])], "doc_id long, text string"),
+        "text", fpp, append=False,
+    ).count() == 0
+
+
+def _simhash_partners(spark, shp, rows):
+    """SimHash store: a probe equal to doc 2's text pairs with 3 only
+    once 2 is tombstoned."""
+    probe = spark.createDataFrame(
+        [(300, rows[2][1])], "doc_id long, text string"
+    )
+    got = dd.simhash_dedup_increment(
+        spark, probe, "text", shp, max_hamming=3, append=False
+    ).collect()
+    assert ({r["id_a"] for r in got} | {r["id_b"] for r in got}) - {300} == {3}
+
+
+def _lifecycle_case(spark, kind):
+    """(save, tagged append, delete, compact, load-rows, extra check,
+    {list key: artifact prefix}, other manifest keys) for one store
+    kind. Base rows have ids 0..7 (docs 2k and 2k+1 share a text);
+    the tagged append adds ids 10..12; id 2 is deleted."""
+    import numpy as np
+
+    from big_data_analysis_spark.operators import index_store
+    from big_data_analysis_spark.operators import multimodal as mm
+    from big_data_analysis_spark.operators import similarity as sim
+    from big_data_analysis_spark.operators import video as vd
+
+    rows = [(i, " ".join(f"t{i // 2}_{j}" for j in range(12))) for i in range(8)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    shard = spark.createDataFrame(
+        [(i, " ".join(f"s{i}_{j}" for j in range(12))) for i in (10, 11, 12)],
+        "doc_id long, text string",
+    )
+    tag = dict(version_tag="batch-1")
+    if kind == "fingerprint":
+        return (
+            lambda p: dd.fingerprint_index_save(docs, "text", "doc_id", p),
+            lambda p: dd.exact_dedup_increment(spark, shard, "text", p, **tag),
+            dd.fingerprint_index_delete, dd.fingerprint_index_compact,
+            lambda p: dd.fingerprint_index_load(spark, p)[0].select(
+                F.col("keeper_id").alias("id")),
+            lambda p: _fp_keeper_reingest(spark, p, rows),
+            {"fp_dirs": "fps-"}, {"id_col", "id_type"},
+        )
+    if kind == "minhash":
+        return (
+            lambda p: dd.minhash_index_save(docs, "text", "doc_id", p,
+                                            num_hashes=16, num_bands=4),
+            lambda p: dd.minhash_dedup_increment(spark, shard, "text", p, **tag),
+            dd.minhash_index_delete, dd.minhash_index_compact,
+            lambda p: dd.minhash_index_load(spark, p)[0],
+            None,
+            {"sig_dirs": "sigs-", "band_dirs": "bands-"},
+            {"num_hashes", "num_bands", "rows_per_band", "shingle_n", "id_col"},
+        )
+    if kind == "simhash":
+        return (
+            lambda p: dd.simhash_index_save(docs, "text", "doc_id", p),
+            lambda p: dd.simhash_dedup_increment(spark, shard, "text", p, **tag),
+            dd.simhash_index_delete, dd.simhash_index_compact,
+            lambda p: dd.simhash_index_load(spark, p)[0],
+            lambda p: _simhash_partners(spark, p, rows),
+            {"sh_dirs": "shs-"}, {"id_col"},
+        )
+    if kind == "containment":
+        return (
+            lambda p: dd.containment_index_save(docs, "text", "doc_id", p,
+                                                n=2, threshold=0.5),
+            lambda p: dd.containment_dedup_increment(spark, shard, "text", p, **tag),
+            dd.containment_index_delete, dd.containment_index_compact,
+            lambda p: dd.containment_index_load(spark, p)[0].select("id").distinct(),
+            None,
+            {"cg_dirs": "cgs-"}, {"id_col", "id_type", "n", "threshold"},
+        )
+    if kind == "leakage_split":
+        # leakage_split_increment takes no version_tag: the tagged
+        # append runs through the store module itself
+        def split_append(p):
+            _, man = dd.split_index_load(spark, p)
+            assigned = dd.leakage_split_increment(
+                spark, shard, "text", p, append=False)
+            index_store.append(dd._SPLIT, p, man, assigned.select(
+                F.col("doc_id").alias("id"), F.lit("fp").alias("fp"),
+                "group_key", "split"), tag="batch-1")
+
+        return (
+            lambda p: dd.split_index_save(docs, "text", "doc_id", p),
+            split_append,
+            dd.split_index_delete, dd.split_index_compact,
+            lambda p: dd.split_index_load(spark, p)[0],
+            None,
+            {"split_dirs": "split-"},
+            {"id_col", "id_type", "test_fraction", "seed", "buckets"},
+        )
+    if kind == "ivfpq":
+        rng = np.random.default_rng(3)
+        emb = spark.createDataFrame(
+            [(i, [float(x) for x in rng.normal(size=4)]) for i in (*range(8), 10, 11, 12)],
+            "vec_id long, embedding array<double>",
+        )
+
+        def ivf_save(p):
+            base = emb.filter(F.col("vec_id") < 8)
+            sim.ivfpq_save(*sim.ivfpq_build(base, n_cells=2, m=2, k=4, max_iter=2), p)
+
+        return (
+            ivf_save,
+            lambda p: sim.ivfpq_append(spark, p, emb.filter(F.col("vec_id") >= 10),
+                                       **tag),
+            sim.ivfpq_delete, sim.ivfpq_compact,
+            lambda p: sim.ivfpq_load(spark, p)[0].select(F.col("vec_id").alias("id")),
+            None,
+            {"encoded_dirs": "encoded-"},
+            {"version", "codebooks_file", "n_cells", "dim", "m", "k",
+             "metadata_cols", "id_col"},
+        )
+    save, incr, delete, compact, load, fp_col, dirs_key, prefix = {
+        "dhash": (mm.dhash_index_save, mm.image_dedup_increment,
+                  mm.dhash_index_delete, mm.dhash_index_compact,
+                  mm.dhash_index_load, "dhash", "dh_dirs", "dhs-"),
+        "audiofp": (mm.audio_fp_index_save, mm.audio_dedup_increment,
+                    mm.audio_fp_index_delete, mm.audio_fp_index_compact,
+                    mm.audio_fp_index_load, "afp", "afp_dirs", "afp-"),
+        "videofp": (vd.video_fp_index_save, vd.video_dedup_increment,
+                    vd.video_fp_index_delete, vd.video_fp_index_compact,
+                    vd.video_fp_index_load, "vfp", "vfp_dirs", "vfp-"),
+    }[kind]
+    hashed = spark.createDataFrame(
+        [(i, (i // 2) << 20) for i in range(8)], f"id long, {fp_col} long")
+    fresh = spark.createDataFrame(
+        [(i, (i * 7919) << 40) for i in (10, 11, 12)], f"id long, {fp_col} long")
+    return (
+        lambda p: save(hashed, p),
+        lambda p: incr(spark, fresh, p, **tag),
+        delete, compact,
+        lambda p: load(spark, p)[0],
+        None,
+        {dirs_key: prefix}, {"id_col", "id_type"},
+    )
+
+
+@pytest.mark.parametrize("kind", [
+    "fingerprint", "minhash", "simhash", "containment", "leakage_split",
+    "ivfpq", "dhash", "audiofp", "videofp",
+])
+def test_fp_and_simhash_index_delete_compact_lifecycle(spark, request, kind):
+    """Every persisted store kind runs the ONE index_store lifecycle:
+    save, tagged append (artifacts named ``<prefix>tag-<tag>``, tag in
+    the ``tags`` ledger), scoped tombstone delete (masked at load, no
+    artifact rewrite, empty delete = no version churn), compaction
+    (one dir per group, tombstones purged physically, tags ledger
+    kept, a second compact is a no-op) and load. Manifest keys and
+    artifact prefixes keep the layout each store had before the
+    stores shared one module. The fingerprint case also pins keeper
+    re-ingest after a delete, the SimHash case pair masking."""
     import json
     import os
     import shutil
 
-    rows = [(i, " ".join(f"t{i // 2}_{j}" for j in range(12))) for i in range(8)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    base = f"/root/repo/.scratch/idx-del2-{os.getpid()}"
-    request.addfinalizer(lambda: shutil.rmtree(base, ignore_errors=True))
-    shutil.rmtree(base, ignore_errors=True)
+    save, append, delete, compact, load, extra, prefixes, meta = (
+        _lifecycle_case(spark, kind))
+    path = _scratch_path(f"lifecycle-{kind}")
+    request.addfinalizer(lambda: shutil.rmtree(path, ignore_errors=True))
+    shutil.rmtree(path, ignore_errors=True)
 
-    # --- fingerprint store: delete keeper -> identical text re-ingestable
-    fpp = f"{base}/fp"
-    dd.fingerprint_index_save(docs, "text", "doc_id", fpp)
-    dup0 = spark.createDataFrame(
-        [(100, rows[0][1])], "doc_id long, text string"
-    )
-    # doc 0's text is indexed (keeper 0): the copy dies
-    assert dd.exact_dedup_increment(
-        spark, dup0, "text", fpp, append=False
-    ).count() == 0
-    dd.fingerprint_index_delete(spark, fpp, [0])
-    fps, _ = dd.fingerprint_index_load(spark, fpp)
-    assert fps.filter(F.col("keeper_id") == 0).count() == 0
-    # the text is re-ingestable now, and the increment re-indexes it
-    surv = dd.exact_dedup_increment(spark, dup0, "text", fpp)
-    assert [r["doc_id"] for r in surv.collect()] == [100]
-    # the SAME text arriving again dies against the re-indexed fp
-    assert dd.exact_dedup_increment(
-        spark,
-        spark.createDataFrame([(200, rows[0][1])], "doc_id long, text string"),
-        "text", fpp, append=False,
-    ).count() == 0
-    dd.fingerprint_index_compact(spark, fpp)
-    man = json.load(open(os.path.join(fpp, "_INDEX.json")))
-    assert len(man["fp_dirs"]) == 1 and "tombstones_file" not in man
-    raw = spark.read.parquet(os.path.join(fpp, man["fp_dirs"][0]))
-    assert raw.filter(F.col("keeper_id") == 0).count() == 0
-    assert raw.filter(F.col("keeper_id") == 100).count() == 1
+    def manifest():
+        return json.load(open(os.path.join(path, "_INDEX.json")))
 
-    # --- simhash store: delete masks pairs, compact purges
-    shp = f"{base}/sh"
-    dd.simhash_index_save(docs, "text", "doc_id", shp)
-    probe = spark.createDataFrame(
-        [(300, rows[2][1])], "doc_id long, text string"
-    )
+    def ids():
+        return sorted(r["id"] for r in load(path).select("id").collect())
 
-    def partners():
-        got = dd.simhash_dedup_increment(
-            spark, probe, "text", shp, max_hamming=3, append=False
-        ).collect()
-        return ({r["id_a"] for r in got} | {r["id_b"] for r in got}) - {300}
+    save(path)
+    man0 = manifest()
+    layout = {"format_version", "kind", "retained", *prefixes, *meta}
+    assert set(man0) == layout and man0["kind"] == kind
+    for key, prefix in prefixes.items():
+        assert len(man0[key]) == 1 and man0[key][0].startswith(prefix)
+    if kind == "ivfpq":
+        assert man0["codebooks_file"].startswith("codebooks-")
 
-    assert partners() == {2, 3}
-    dd.simhash_index_delete(spark, shp, [2])
-    assert partners() == {3}
-    dd.simhash_index_compact(spark, shp)
-    man2 = json.load(open(os.path.join(shp, "_INDEX.json")))
-    assert len(man2["sh_dirs"]) == 1 and "tombstones_file" not in man2
-    raw2 = spark.read.parquet(os.path.join(shp, man2["sh_dirs"][0]))
-    assert raw2.count() == 7 and raw2.filter(F.col("id") == 2).count() == 0
-    assert partners() == {3}
-    # empty delete: no version churn; compact idempotent
-    dd.simhash_index_delete(spark, shp, [])
-    dd.simhash_index_compact(spark, shp)
-    assert json.load(open(os.path.join(shp, "_INDEX.json"))) == man2
+    append(path)
+    man1 = manifest()
+    assert man1["tags"] == ["batch-1"]
+    for key, prefix in prefixes.items():
+        assert man1[key] == man0[key] + [f"{prefix}tag-batch-1"]
+    assert {2, 10, 11, 12} <= set(ids())
+
+    delete(spark, path, [2])
+    man2 = manifest()
+    assert man2["tombstones_file"].startswith("tombstones-")
+    assert {k: man2[k] for k in prefixes} == {k: man1[k] for k in prefixes}
+    assert 2 not in ids()
+    delete(spark, path, [])
+    assert manifest() == man2
+    if extra is not None:
+        extra(path)
+
+    before = ids()
+    compact(spark, path)
+    man3 = manifest()
+    assert "tombstones_file" not in man3 and man3["tags"] == ["batch-1"]
+    assert set(man3) == layout | {"tags"}
+    for key, prefix in prefixes.items():
+        assert len(man3[key]) == 1 and man3[key][0].startswith(prefix)
+        raw = spark.read.parquet(os.path.join(path, man3[key][0]))
+        if "id" in raw.columns:
+            assert raw.filter(F.col("id") == 2).count() == 0
+    assert ids() == before
+    compact(spark, path)
+    assert manifest() == man3
 
 
 def test_minhash_index_delete_tombstone_lifecycle(spark, request):
@@ -2226,3 +2386,93 @@ def test_cascade_increment_equals_composed_tiers(spark, request):
     assert {i for i, t in got3.items() if t == "kept"} == (
         {3000000 + s for s in range(20, 30)} | {4000000 + k for k in range(10)}
     )
+
+
+def _cascade_stores(spark, base):
+    """Seed fp / MinHash / SimHash stores over ten distinct texts;
+    returns (fp, mh, sh) paths and the seed texts."""
+    import os
+    import shutil
+
+    shutil.rmtree(base, ignore_errors=True)
+    fp, mh, sh = (os.path.join(base, p) for p in ("fp", "mh", "sh"))
+    texts = [" ".join(f"c{i}w{j}" for j in range(20)) for i in range(10)]
+    seed = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    dd.fingerprint_index_save(seed, "text", "doc_id", fp)
+    dd.minhash_index_save(seed, "text", "doc_id", mh, num_hashes=16, num_bands=4)
+    dd.simhash_index_save(seed, "text", "doc_id", sh)
+    return fp, mh, sh, texts
+
+
+def test_cascade_append_failure_waits_for_sibling_appends(spark, request,
+                                                          monkeypatch):
+    """A failed deferred append (here the MinHash tier's) propagates
+    out of the cascade only after every sibling append — the slower
+    SimHash one included — has finished writing: no append thread is
+    left running behind the error."""
+    import os
+    import shutil
+    import time
+
+    from big_data_analysis_spark import io as bio
+
+    base = _scratch_path("cascade-fail")
+    request.addfinalizer(lambda: shutil.rmtree(base, ignore_errors=True))
+    fp, mh, sh, _ = _cascade_stores(spark, base)
+    shard = spark.createDataFrame(
+        [(100 + k, " ".join(f"n{k}w{j}" for j in range(20))) for k in range(4)],
+        "doc_id long, text string",
+    )
+    real = bio.write_parquet
+    finished = []
+
+    def flaky(df, path, *args, **kwargs):
+        name = os.path.basename(path)
+        if name.startswith("sigs-"):
+            raise RuntimeError("injected append failure")
+        if name.startswith("shs-"):
+            time.sleep(2.0)
+        real(df, path, *args, **kwargs)
+        finished.append(name)
+
+    monkeypatch.setattr(bio, "write_parquet", flaky)
+    with pytest.raises(RuntimeError, match="injected append failure"):
+        dd.dedup_cascade_increment(spark, shard, "text", fp, mh, sh)
+    assert [n for n in finished if n.startswith("fps-")]
+    assert [n for n in finished if n.startswith("shs-")]
+
+
+def test_cascade_rejects_bad_on_existing_when_exact_catches_all(spark, request):
+    """``on_existing`` is validated at the cascade's entry, so a shard
+    the exact tier catches in full (no near tier ever runs) still
+    refuses an unknown mode instead of accepting it silently."""
+    import os
+    import shutil
+
+    base = _scratch_path("cascade-onex")
+    request.addfinalizer(lambda: shutil.rmtree(base, ignore_errors=True))
+    fp, mh, sh, texts = _cascade_stores(spark, base)
+    copies = spark.createDataFrame(
+        [(100 + i, t) for i, t in enumerate(texts[:3])], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="on_existing"):
+        dd.dedup_cascade_increment(
+            spark, copies, "text", fp, mh, sh, on_existing="replace"
+        )
+    verdicts = dd.dedup_cascade_increment(spark, copies, "text", fp, mh, sh)
+    assert {r["tier"] for r in verdicts.collect()} == {"exact"}
+
+
+def test_increment_on_wrong_store_kind_names_both_kinds(spark, request):
+    """Every load checks the manifest kind: a SimHash store handed to
+    the MinHash increment raises a ValueError naming both kinds (not a
+    KeyError on a missing manifest key)."""
+    import os
+    import shutil
+
+    base = _scratch_path("wrong-kind")
+    request.addfinalizer(lambda: shutil.rmtree(base, ignore_errors=True))
+    _fp, _mh, sh, texts = _cascade_stores(spark, base)
+    shard = spark.createDataFrame([(100, texts[0])], "doc_id long, text string")
+    with pytest.raises(ValueError, match="'simhash'.*'minhash'"):
+        dd.minhash_dedup_increment(spark, shard, "text", sh)
