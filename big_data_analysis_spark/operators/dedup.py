@@ -1624,12 +1624,13 @@ def exact_dedup_increment(
     its own fingerprints and silently returned zero survivors), and a
     call that finds its tag already committed — the crashed-between-
     fp-append-and-sink-publish interleaving — re-derives the ORIGINAL
-    survivors instead: shard rows whose (fp, id) is a keeper of the
-    MASKED index (VERDICT r8: a takedown racing the crash-recovery
-    window must not be re-admitted; sound wherever compaction has
-    moved the tagged rows, because an id enters the store through
-    exactly one increment — the exactly-once source contract — so a
-    (fp, id) keeper match can only come from THIS shard's first
+    survivors instead: shard rows whose (fp, id) is a tagged keeper,
+    read from the tagged dir with the TOMBSTONE MASK applied (VERDICT
+    r8: a takedown racing the crash-recovery window must not be
+    re-admitted), or from the full masked index when compaction has
+    absorbed the tagged dir (sound because an id enters the store
+    through exactly one increment — the exactly-once source contract —
+    so a (fp, id) keeper match can only come from THIS shard's first
     attempt). Requires the replayed shard to be byte-identical to the
     first attempt (Spark's replayable-source contract).
 
@@ -1679,10 +1680,16 @@ def exact_dedup_increment(
         # The anti-join below would now see the shard's own fingerprints
         # in the index and return zero survivors — so re-derive the
         # original survivors instead: a shard row survives iff its
-        # (fp, id) is a keeper of the masked index (VERDICT r8: a
-        # takedown that deleted one of the tagged keepers between the
+        # (fp, id) is a keeper of the MASKED tagged version (VERDICT r8:
+        # a takedown that deleted one of the tagged keepers between the
         # crash and the replay must not see its row re-admitted and
-        # published).
+        # published). Not of an earlier version: a doc an earlier shard
+        # archived under the same id was dropped on the first attempt
+        # but matches its own older keeper. Once compaction has folded
+        # the tagged dir away, the whole masked index stands in.
+        tag_dir = f"fps-tag-{version_tag}"
+        if tag_dir in man["fp_dirs"]:
+            fps_idx = store.load_version(_FINGERPRINT, spark, path, man, tag_dir)
         keepers = fps_idx.select(
             F.col("fp").alias("__fp"), F.col("keeper_id").alias(id_col)
         )

@@ -222,14 +222,9 @@ def save(spec: StoreKind, path: str, rows: DataFrame, meta: dict) -> None:
     commit_manifest(spec, path, {**meta, **{k: [d] for k, d in dirs.items()}})
 
 
-def load(spec: StoreKind, spark, path: str, op: str):
-    """Lazy ``(*frames, manifest)``, one frame per group. Multi-version
-    stores union per-dir scans (Spark refuses multi-root reads of
-    separately-partitioned dirs); a predicate on a partition column
-    prunes each branch's listing independently. Tombstoned ids are
-    masked per branch, scoped to the versions that existed when the
-    delete committed."""
-    man = read_manifest(spec, path, op)
+def _masker(spec: StoreKind, spark, path: str, man: dict):
+    """mask(frame, i): broadcast-anti-join away the ids whose tombstone
+    scope covers version i. The tombstones are read once, here."""
     tombs = None
     if man.get("tombstones_file"):
         import pyarrow.parquet as pq_
@@ -246,6 +241,18 @@ def load(spec: StoreKind, spark, path: str, op: str):
         )
         return frame.join(F.broadcast(tomb), id_field, "left_anti")
 
+    return mask
+
+
+def load(spec: StoreKind, spark, path: str, op: str):
+    """Lazy ``(*frames, manifest)``, one frame per group. Multi-version
+    stores union per-dir scans (Spark refuses multi-root reads of
+    separately-partitioned dirs); a predicate on a partition column
+    prunes each branch's listing independently. Tombstoned ids are
+    masked per branch, scoped to the versions that existed when the
+    delete committed."""
+    man = read_manifest(spec, path, op)
+    mask = _masker(spec, spark, path, man)
     frames = []
     for g in spec.groups:
         if not man[g.key]:
@@ -263,6 +270,15 @@ def load(spec: StoreKind, spark, path: str, op: str):
             ))
         frames.append(frame)
     return (*frames, man)
+
+
+def load_version(spec: StoreKind, spark, path: str, man: dict,
+                 name: str) -> DataFrame:
+    """The masked rows of ONE version of the first group: the artifact
+    dir ``name`` listed in ``man``."""
+    i = man[spec.groups[0].key].index(name)
+    return _masker(spec, spark, path, man)(
+        spark.read.parquet(os.path.join(path, name)), i)
 
 
 def delete(spec: StoreKind, path: str, ids, op: str) -> None:

@@ -1111,21 +1111,19 @@ def synthesize_perturbed_pgms(
 
 
 def _media_store(kind: str, dirs_key: str, prefix: str, fp_col: str):
+    """(store kind, fingerprint column) of a store of (id, fp_col) rows."""
     return store.StoreKind(kind, 1, (
         store.Group(dirs_key, prefix, f"id {{id_type}}, {fp_col} long"),
-    ))
+    )), fp_col
 
 
-def _fp_col(spec) -> str:
-    return spec.groups[0].fields[1][0]  # rows are (id, <fingerprint>)
-
-
-_DHASH = _media_store("dhash", "dh_dirs", "dhs-", "dhash")
-_AUDIO_FP = _media_store("audiofp", "afp_dirs", "afp-", "afp")
+_DHASH, _DHASH_COL = _media_store("dhash", "dh_dirs", "dhs-", "dhash")
+_AUDIO_FP, _AUDIO_FP_COL = _media_store("audiofp", "afp_dirs", "afp-", "afp")
 
 
 def _media_index_save(
-    spec, hashed: DataFrame, path: str, id_col: str, op: str, init_name: str,
+    spec, fp_col: str, hashed: DataFrame, path: str, id_col: str, op: str,
+    init_name: str,
 ) -> None:
     """Save (id, hash) rows after the shared increment shard contract —
     unique non-null ids, NON-NULL fingerprint (a decode-error row has
@@ -1133,7 +1131,6 @@ def _media_index_save(
     corrupt-tolerance flow) — in ONE aggregate."""
     from .dedup import _increment_precheck
 
-    fp_col = _fp_col(spec)
     rows = hashed.select(F.col(id_col).alias("id"), fp_col)
     if _increment_precheck(op, rows, "id", None, fp_col) == 0:
         # writing a zero-row frame would publish a part-less,
@@ -1157,7 +1154,8 @@ def dhash_index_save(hashed: DataFrame, path: str, id_col: str = "id") -> None:
     of re-decoding any archive image. Same versioned-artifact +
     atomic-manifest discipline as the text stores."""
     _media_index_save(
-        _DHASH, hashed, path, id_col, "dhash_index_save", "dhash_index_init"
+        _DHASH, _DHASH_COL, hashed, path, id_col, "dhash_index_save",
+        "dhash_index_init",
     )
 
 
@@ -1199,7 +1197,7 @@ def audio_fp_index_save(hashed: DataFrame, path: str, id_col: str = "id") -> Non
     NULL afp raises). 16 bytes/clip, same versioned-artifact +
     atomic-manifest discipline as the image and text stores."""
     _media_index_save(
-        _AUDIO_FP, hashed, path, id_col, "audio_fp_index_save",
+        _AUDIO_FP, _AUDIO_FP_COL, hashed, path, id_col, "audio_fp_index_save",
         "audio_fp_index_init",
     )
 
@@ -1273,8 +1271,8 @@ def image_dedup_increment(
     one scan of the 16-byte/image store bucketed on the combo keys;
     AQE broadcasts the small shard side."""
     return _fp_dedup_increment(
-        _DHASH, spark, new_hashed, path, max_hamming, id_col, append,
-        on_existing, return_stats, version_tag, "image_dedup_increment",
+        _DHASH, _DHASH_COL, spark, new_hashed, path, max_hamming, id_col,
+        append, on_existing, return_stats, version_tag, "image_dedup_increment",
     )
 
 
@@ -1297,13 +1295,15 @@ def audio_dedup_increment(
     vs batch ``audio_near_dup_pairs``; version_tag replay idempotence.
     See :func:`image_dedup_increment` for the full contract text."""
     return _fp_dedup_increment(
-        _AUDIO_FP, spark, new_hashed, path, max_hamming, id_col, append,
-        on_existing, return_stats, version_tag, "audio_dedup_increment",
+        _AUDIO_FP, _AUDIO_FP_COL, spark, new_hashed, path, max_hamming,
+        id_col, append, on_existing, return_stats, version_tag,
+        "audio_dedup_increment",
     )
 
 
 def _fp_dedup_increment(
     spec,
+    fp_col: str,
     spark,
     new_hashed: DataFrame,
     path: str,
@@ -1322,7 +1322,6 @@ def _fp_dedup_increment(
         _simhash_incr_pairs,
     )
 
-    fp_col = _fp_col(spec)
     idx, man = store.load(spec, spark, path, op)
     replay = store.replayed(man, version_tag, op)
     shard = new_hashed.select(

@@ -59,7 +59,7 @@ from big_data_analysis_spark.operators.multimodal import (
 #: Video store: the shared media-store layout with its own manifest
 #: kind / fingerprint column / artifact prefix, so video state can
 #: never be mixed into an image or audio store.
-_VIDEO_FP = _media_store("videofp", "vfp_dirs", "vfp-", "vfp")
+_VIDEO_FP, _VIDEO_FP_COL = _media_store("videofp", "vfp_dirs", "vfp-", "vfp")
 
 
 # ---------------------------------------------------------------------------
@@ -310,7 +310,7 @@ def video_fp_index_save(hashed: DataFrame, path: str, id_col: str = "id") -> Non
     first; NULL vfp raises). 16 bytes/clip, same versioned-artifact +
     atomic-manifest discipline as the image, audio, and text stores."""
     _media_index_save(
-        _VIDEO_FP, hashed, path, id_col, "video_fp_index_save",
+        _VIDEO_FP, _VIDEO_FP_COL, hashed, path, id_col, "video_fp_index_save",
         "video_fp_index_init",
     )
 
@@ -363,8 +363,9 @@ def video_dedup_increment(
     See ``multimodal.image_dedup_increment`` for the full contract
     text."""
     return _fp_dedup_increment(
-        _VIDEO_FP, spark, new_hashed, path, max_hamming, id_col, append,
-        on_existing, return_stats, version_tag, "video_dedup_increment",
+        _VIDEO_FP, _VIDEO_FP_COL, spark, new_hashed, path, max_hamming,
+        id_col, append, on_existing, return_stats, version_tag,
+        "video_dedup_increment",
     )
 
 

@@ -365,38 +365,68 @@ def _scratch_path(name: str) -> str:
     return os.path.join(repo, ".scratch", f"{name}-{os.getpid()}")
 
 
-def _fp_keeper_reingest(spark, fpp, rows):
-    """Fingerprint store: a deleted KEEPER's (id 2) identical text
-    becomes re-ingestable, the increment re-indexes it, and the same
-    text arriving again dies against the re-indexed fp."""
-    dup0 = spark.createDataFrame(
-        [(100, rows[2][1])], "doc_id long, text string"
-    )
-    surv = dd.exact_dedup_increment(spark, dup0, "text", fpp)
-    assert [r["doc_id"] for r in surv.collect()] == [100]
-    assert dd.exact_dedup_increment(
-        spark,
-        spark.createDataFrame([(200, rows[2][1])], "doc_id long, text string"),
-        "text", fpp, append=False,
-    ).count() == 0
+def _fp_lifecycle_checks(spark, rows):
+    """Fingerprint store (before delete, after delete, after compact):
+    a copy of keeper 2's text dies while 2 is indexed; once 2 is
+    deleted the text is re-ingestable, the increment re-indexes it
+    under keeper 100 and the same text arriving again dies; the
+    compacted dir holds exactly one keeper-100 row."""
+
+    def copy_of_2(doc_id):
+        return spark.createDataFrame(
+            [(doc_id, rows[2][1])], "doc_id long, text string"
+        )
+
+    def before_delete(fpp):
+        assert dd.exact_dedup_increment(
+            spark, copy_of_2(100), "text", fpp, append=False
+        ).count() == 0
+
+    def after_delete(fpp):
+        surv = dd.exact_dedup_increment(spark, copy_of_2(100), "text", fpp)
+        assert [r["doc_id"] for r in surv.collect()] == [100]
+        assert dd.exact_dedup_increment(
+            spark, copy_of_2(200), "text", fpp, append=False
+        ).count() == 0
+
+    def after_compact(fpp, raw):
+        assert raw.filter(F.col("keeper_id") == 100).count() == 1
+
+    return before_delete, after_delete, after_compact
 
 
-def _simhash_partners(spark, shp, rows):
-    """SimHash store: a probe equal to doc 2's text pairs with 3 only
-    once 2 is tombstoned."""
+def _simhash_lifecycle_checks(spark, rows):
+    """SimHash store (before delete, after delete, after compact): a
+    probe equal to doc 2's text pairs with {2, 3}, with {3} once 2 is
+    tombstoned, and still with {3} after compaction, whose dir holds
+    the 8 base + 3 appended rows minus the deleted one."""
     probe = spark.createDataFrame(
         [(300, rows[2][1])], "doc_id long, text string"
     )
-    got = dd.simhash_dedup_increment(
-        spark, probe, "text", shp, max_hamming=3, append=False
-    ).collect()
-    assert ({r["id_a"] for r in got} | {r["id_b"] for r in got}) - {300} == {3}
+
+    def partners(shp):
+        got = dd.simhash_dedup_increment(
+            spark, probe, "text", shp, max_hamming=3, append=False
+        ).collect()
+        return ({r["id_a"] for r in got} | {r["id_b"] for r in got}) - {300}
+
+    def before_delete(shp):
+        assert partners(shp) == {2, 3}
+
+    def after_delete(shp):
+        assert partners(shp) == {3}
+
+    def after_compact(shp, raw):
+        assert raw.count() == 10
+        assert partners(shp) == {3}
+
+    return before_delete, after_delete, after_compact
 
 
 def _lifecycle_case(spark, kind):
-    """(save, tagged append, delete, compact, load-rows, extra check,
-    {list key: artifact prefix}, other manifest keys) for one store
-    kind. Base rows have ids 0..7 (docs 2k and 2k+1 share a text);
+    """(save, tagged append, delete, compact, load-rows, kind-specific
+    checks or None, {list key: artifact prefix}, other manifest keys)
+    for one store kind. Base rows have ids 0..7 (docs 2k and 2k+1 share a text);
     the tagged append adds ids 10..12; id 2 is deleted."""
     import numpy as np
 
@@ -419,7 +449,7 @@ def _lifecycle_case(spark, kind):
             dd.fingerprint_index_delete, dd.fingerprint_index_compact,
             lambda p: dd.fingerprint_index_load(spark, p)[0].select(
                 F.col("keeper_id").alias("id")),
-            lambda p: _fp_keeper_reingest(spark, p, rows),
+            _fp_lifecycle_checks(spark, rows),
             {"fp_dirs": "fps-"}, {"id_col", "id_type"},
         )
     if kind == "minhash":
@@ -439,7 +469,7 @@ def _lifecycle_case(spark, kind):
             lambda p: dd.simhash_dedup_increment(spark, shard, "text", p, **tag),
             dd.simhash_index_delete, dd.simhash_index_compact,
             lambda p: dd.simhash_index_load(spark, p)[0],
-            lambda p: _simhash_partners(spark, p, rows),
+            _simhash_lifecycle_checks(spark, rows),
             {"sh_dirs": "shs-"}, {"id_col"},
         )
     if kind == "containment":
@@ -531,13 +561,14 @@ def test_fp_and_simhash_index_delete_compact_lifecycle(spark, request, kind):
     (one dir per group, tombstones purged physically, tags ledger
     kept, a second compact is a no-op) and load. Manifest keys and
     artifact prefixes keep the layout each store had before the
-    stores shared one module. The fingerprint case also pins keeper
-    re-ingest after a delete, the SimHash case pair masking."""
+    stores shared one module. The fingerprint case also pins that a
+    copy dies before the delete and keeper re-ingest after it, the
+    SimHash case pair masking before and after delete and compaction."""
     import json
     import os
     import shutil
 
-    save, append, delete, compact, load, extra, prefixes, meta = (
+    save, append, delete, compact, load, checks, prefixes, meta = (
         _lifecycle_case(spark, kind))
     path = _scratch_path(f"lifecycle-{kind}")
     request.addfinalizer(lambda: shutil.rmtree(path, ignore_errors=True))
@@ -564,6 +595,8 @@ def test_fp_and_simhash_index_delete_compact_lifecycle(spark, request, kind):
     for key, prefix in prefixes.items():
         assert man1[key] == man0[key] + [f"{prefix}tag-batch-1"]
     assert {2, 10, 11, 12} <= set(ids())
+    if checks is not None:
+        checks[0](path)
 
     delete(spark, path, [2])
     man2 = manifest()
@@ -572,19 +605,24 @@ def test_fp_and_simhash_index_delete_compact_lifecycle(spark, request, kind):
     assert 2 not in ids()
     delete(spark, path, [])
     assert manifest() == man2
-    if extra is not None:
-        extra(path)
+    if checks is not None:
+        checks[1](path)
 
     before = ids()
     compact(spark, path)
     man3 = manifest()
     assert "tombstones_file" not in man3 and man3["tags"] == ["batch-1"]
     assert set(man3) == layout | {"tags"}
+    # the column tombstones mask: fingerprint rows are (fp, keeper_id),
+    # IVFPQ rows are keyed by the manifest's id_col
+    masked = {"fingerprint": "keeper_id", "ivfpq": man3["id_col"]}.get(kind, "id")
     for key, prefix in prefixes.items():
         assert len(man3[key]) == 1 and man3[key][0].startswith(prefix)
         raw = spark.read.parquet(os.path.join(path, man3[key][0]))
-        if "id" in raw.columns:
-            assert raw.filter(F.col("id") == 2).count() == 0
+        assert raw.filter(F.col(masked) == 2).count() == 0
+    if checks is not None:
+        checks[2](path, spark.read.parquet(
+            os.path.join(path, man3[next(iter(prefixes))][0])))
     assert ids() == before
     compact(spark, path)
     assert manifest() == man3
@@ -1620,6 +1658,33 @@ def test_exact_replay_masks_takedown_and_survives_compaction(spark, request):
         spark, b1, "text", path, version_tag="b1"
     ).select("doc_id").collect()}
     assert surv1 == {21}
+
+
+def test_exact_replay_keeps_archived_resubmission_dropped(spark, request):
+    """A tagged shard that resubmits an already-archived doc (same id,
+    same text — an overlapping shard) drops it on the first attempt,
+    and the replay of that tag drops it too: the replay's keepers come
+    from the tagged version only, not from the doc's own older keeper
+    in an earlier version."""
+    import shutil
+
+    path = _scratch_path("fp-replay-archived")
+    request.addfinalizer(lambda: shutil.rmtree(path, ignore_errors=True))
+    shutil.rmtree(path, ignore_errors=True)
+
+    dd.fingerprint_index_save(spark.createDataFrame(
+        [(i, f"archived doc {i}") for i in range(4)], "doc_id long, text string"
+    ), "text", "doc_id", path)
+    shard = spark.createDataFrame(
+        [(1, "archived doc 1"), (50, "fresh doc 50")], "doc_id long, text string"
+    )
+    first = dd.exact_dedup_increment(spark, shard, "text", path, version_tag="t1")
+    assert [r["doc_id"] for r in first.collect()] == [50]
+    replay, st = dd.exact_dedup_increment(
+        spark, shard, "text", path, version_tag="t1", return_stats=True
+    )
+    assert st["replayed"] is True
+    assert [r["doc_id"] for r in replay.collect()] == [50]
 
 
 def _nondeterministic_shard(spark, scratch: str, n_rows: int = 8):
